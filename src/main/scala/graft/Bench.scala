@@ -198,21 +198,40 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] artifact file write failed: $e")
     }
-    // The LAST stdout line is a COMPACT restatement of the full line
-    // above — same keys, same semantics, lower precision, no runs/mins
-    // maps. The driver parses its bounded stdout TAIL: the full line
-    // (243 queries × rep arrays, ~22 KB) has overflowed that buffer
-    // every round since r10 ("parsed": null in each BENCH_r*.json), so
-    // per-query round-over-round comparison and the scaling block came
-    // back empty for 8 rounds. ~5.5 KB is the floor for a line that
-    // still carries all 243 per-query figures (the names alone are
-    // 3.5 KB). Values are the SAME medians the full line reports,
-    // rounded to 10 ms; nothing is measured differently — the full
-    // artifact (reps, mins, budget flags, stream series) is in
-    // BENCH_driver*.json.
-    val qsCompact = obj(results.map { case (k, v) => k -> f"$v%.2f" })
-    println(s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec","cpus":${cpus.toInt},"queries":$qsCompact,"errors":$errs,"host_probe":$probeJson,"stream_rows_per_sec":$streamTput,"stream_rows_per_sec_median":$streamMedian,"sf":"$sfDir"}""")
+    println(tailLine(results, errors, budgetViolations.size, cpus.toInt,
+      (probeSingle, probePar), (streamTput, streamMedian, streamRates.length),
+      sfDir))
     spark.stop()
+  }
+
+  /** Bench runners parse at most this many bytes of the LAST stdout line. */
+  val TailLineMaxBytes = 1900
+
+  /** The LAST stdout line: the headline figures as SCALARS only. A
+    * bench runner parses a bounded (~2000-char) stdout tail, and the line
+    * that carried all 243 per-query medians (~5.5 KB; the full
+    * artifact line is ~22 KB) overflowed it every round since r10
+    * ("parsed": null in each BENCH_r*.json). Per-query medians, mins,
+    * rep series, error messages and budget flags stay in
+    * BENCH_driver*.json; here `results`/`errors` collapse to counts
+    * and the total, so the line's size does not grow with the
+    * registry (BenchLineSpec pins ≤ [[TailLineMaxBytes]] at 243
+    * queries, all failing). */
+  def tailLine(results: Seq[(String, Double)], errors: collection.Map[String, String],
+               nBudgetViolations: Int, cpus: Int,
+               probe: (Double, Double), stream: (Double, Double, Int),
+               sf: String): String = {
+    val total = results.map(_._2).sum
+    val (probeSingle, probeParallel) = probe
+    val (streamTput, streamMedian, streamBatches) = stream
+    s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec",""" +
+      s""""cpus":$cpus,"queries":${results.length},"errors":${errors.size},""" +
+      s""""budget_violations":$nBudgetViolations,""" +
+      f""""host_probe_single_sec":$probeSingle%.3f,""" +
+      f""""host_probe_parallel_sec":$probeParallel%.3f,""" +
+      s""""stream_rows_per_sec":$streamTput,""" +
+      s""""stream_rows_per_sec_median":$streamMedian,""" +
+      s""""stream_batches":$streamBatches,"sf":"$sf"}"""
   }
 
   /** Sink for [[hostProbe]]'s spin results: a @volatile store is an

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Streaming soak for the INDEX-IN-THE-LOOP ingest path
-  * ([[graft.streaming.DocStream.ingest]]): seed a persisted
+  * ([[graft.streaming.DocStream.ingestGen]]): seed a persisted
   * [[graft.llm.LshIndex]], then drive a rate-source document feed
   * through curate → history gate → corpus append → index append,
   * logging every micro-batch — the measured evidence that the full
@@ -28,28 +28,21 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * INGEST_WATERMARK ("10 minutes"),
   * INGEST_OUT (artifacts/INGEST_SOAK.jsonl).
   *
-  * COMPACTION-COST BOUNDARY (round-14, honest asymptotics) AND ITS
-  * FIX (round-15): the mono loop's in-loop compaction is
-  * [[graft.sources.Bucketed.rewriteInPlace]] — a FULL rewrite of both
-  * index tables, O(corpus) per compact INSIDE a trigger, so the
-  * compact batch's latency grows LINEARLY with stream lifetime:
-  * measured 14.8 s at ~1.5 M corpus rows and 17.6 s at ~2.7 M inside
-  * the green 150 s control (knee_r14/soakW_20000_a.jsonl, batches 5
-  * and 11) — a multi-hour stream at 20 k docs/s breaches p95
-  * regardless of host. `INGEST_GENERATIONAL=1` runs the fix:
-  * [[graft.streaming.DocStream.ingestGen]] over the generational
-  * (hot/cold) [[graft.llm.LshIndex]] — appends land in the hot
-  * generation, the trigger pays metadata renames only
-  * ([[graft.llm.LshMaintenance]]: rotate + commit), the O(corpus)
-  * merge stages on a maintenance thread in a low-weight FAIR pool
-  * (this main configures the pools), and the LSM-style
-  * `hotFractionPm` ratio gate keeps total merge work O(N log N)
-  * across the stream's lifetime instead of quadratic. Evidence:
-  * knee_r15/soakGen_20000_*.jsonl — the generational leg runs past
-  * 2× the r14 boundary corpus with no in-trigger O(corpus) batch;
-  * residual merge-window elevation is core CONTENTION (bounded by
-  * the pool weight), not trigger-path work, and sparsens as the
-  * ratio gate spaces merges geometrically.
+  * The loop runs over the generational (hot/cold)
+  * [[graft.llm.LshIndex]]: appends land in the hot generation, the
+  * trigger pays metadata renames only ([[graft.llm.LshMaintenance]]:
+  * rotate + commit), the O(corpus) merge stages on a maintenance
+  * thread in a low-weight FAIR pool (this main configures the pools),
+  * and the LSM-style `hotFractionPm` ratio gate keeps total merge
+  * work O(N log N) across the stream's lifetime instead of quadratic.
+  * The single-tier index this replaced compacted INSIDE the trigger,
+  * an O(corpus) rewrite whose batch latency grew linearly with stream
+  * lifetime (14.8 s at ~1.5 M corpus rows, 17.6 s at ~2.7 M —
+  * knee_r14/soakW_20000_a.jsonl); the generational leg runs past 2×
+  * that corpus with no in-trigger O(corpus) batch
+  * (knee_r15/soakGen_20000_*.jsonl). Residual merge-window elevation
+  * is core CONTENTION (bounded by the pool weight), not trigger-path
+  * work, and sparsens as the ratio gate spaces merges geometrically.
   *
   * STEADY-STATE NOTE (round-12): a soak shorter than its watermark
   * delay can only ever observe MONOTONE state growth — eviction fires
@@ -72,18 +65,8 @@ object IngestSoak {
     val seconds = sys.env.getOrElse("INGEST_SECONDS", "120").toInt
     val nSeeds = sys.env.getOrElse("INGEST_SEEDS", "10000").toInt
     val watermark = sys.env.getOrElse("INGEST_WATERMARK", "10 minutes")
-    // in-loop index compaction cadence (0 = off): without it, probe
-    // cost creeps with BATCH COUNT (each append adds >=1 file per
-    // touched bucket) — the r12 soak measured per-batch trigger
-    // latency rising 9.9 -> 17 s over 16 uncompacted appends at
-    // 20k docs/s even while state rows plateaued
-    val compactEvery = sys.env.getOrElse("INGEST_COMPACT_EVERY", "0").toInt
-    // generational mode (INGEST_GENERATIONAL=1): DocStream.ingestGen —
-    // hot-generation appends, metadata-only rotate/commit on the
-    // trigger, the O(corpus) merge on a maintenance thread every
-    // INGEST_ROTATE_EVERY batches. The leg that retires the in-loop
-    // compaction boundary documented above.
-    val generational = sys.env.getOrElse("INGEST_GENERATIONAL", "0") == "1"
+    // the O(corpus) merge is handed to the maintenance thread every
+    // INGEST_ROTATE_EVERY batches (subject to the hot-fraction gate)
     val rotateEvery = sys.env.getOrElse("INGEST_ROTATE_EVERY", "8").toInt
     // index bucket count — the PARALLELISM knob, not just layout: a
     // bucketed scan cannot split a bucket across tasks, so the gate's
@@ -127,32 +110,30 @@ object IngestSoak {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", wh)
       .config("spark.ui.enabled", "false")
-    // generational leg: FAIR scheduling with a low-weight maintenance
-    // pool, so the background O(corpus) merge yields task slots to
-    // trigger jobs instead of occupying all of them for its duration
-    // (under FIFO the first generational soak measured 20-28 s trigger
-    // latencies inside merge windows vs ~13 s outside). Weight 1 vs
-    // the default pool's 8 ≈ the merge gets ~1/9 of contended slots.
-    if (generational) {
-      val pools = java.nio.file.Files.createTempFile("ingest_pools", ".xml")
-      java.nio.file.Files.writeString(pools,
-        """<?xml version="1.0"?>
-          |<allocations>
-          |  <pool name="default">
-          |    <schedulingMode>FIFO</schedulingMode>
-          |    <weight>8</weight><minShare>0</minShare>
-          |  </pool>
-          |  <pool name="maintenance">
-          |    <schedulingMode>FIFO</schedulingMode>
-          |    <weight>1</weight><minShare>0</minShare>
-          |  </pool>
-          |</allocations>
-          |""".stripMargin)
-      builder
-        .config("spark.scheduler.mode", "FAIR")
-        .config("spark.scheduler.allocation.file", pools.toString)
-    }
-    val spark = builder.getOrCreate()
+    // FAIR scheduling with a low-weight maintenance pool, so the
+    // background O(corpus) merge yields task slots to trigger jobs
+    // instead of occupying all of them for its duration (under FIFO
+    // the first generational soak measured 20-28 s trigger latencies
+    // inside merge windows vs ~13 s outside). Weight 1 vs the default
+    // pool's 8 ≈ the merge gets ~1/9 of contended slots.
+    val pools = java.nio.file.Files.createTempFile("ingest_pools", ".xml")
+    java.nio.file.Files.writeString(pools,
+      """<?xml version="1.0"?>
+        |<allocations>
+        |  <pool name="default">
+        |    <schedulingMode>FIFO</schedulingMode>
+        |    <weight>8</weight><minShare>0</minShare>
+        |  </pool>
+        |  <pool name="maintenance">
+        |    <schedulingMode>FIFO</schedulingMode>
+        |    <weight>1</weight><minShare>0</minShare>
+        |  </pool>
+        |</allocations>
+        |""".stripMargin)
+    val spark = builder
+      .config("spark.scheduler.mode", "FAIR")
+      .config("spark.scheduler.allocation.file", pools.toString)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -185,15 +166,10 @@ object IngestSoak {
     val seeds = spark.range(nSeeds.toLong)
       .select(col("id").as("doc_id"),
         CurateSoak.docText(col("id") + 555000L).as("text"))
-    rebucketFrom match {
-      case Some(from) =>
-        if (generational) graft.llm.LshIndex.buildGen(seeds, "ingest_soak_idx", from)
-        else graft.llm.LshIndex.build(seeds, "ingest_soak_idx", from)
-        graft.llm.LshIndex.rebucket(spark, "ingest_soak_idx", buckets)
-      case None =>
-        if (generational) graft.llm.LshIndex.buildGen(seeds, "ingest_soak_idx", buckets)
-        else graft.llm.LshIndex.build(seeds, "ingest_soak_idx", buckets)
-    }
+    graft.llm.LshIndex.buildGen(seeds, "ingest_soak_idx",
+      rebucketFrom.getOrElse(buckets))
+    if (rebucketFrom.isDefined)
+      graft.llm.LshIndex.rebucket(spark, "ingest_soak_idx", buckets)
 
     // tiny static eval corpus for the Bloom gate
     val evalDocs = (0L until 20L).toDF("doc_id")
@@ -207,10 +183,10 @@ object IngestSoak {
         .option("numPartitions", cpus)
         .load()
         .select(
-          // feed ids live above the seed range: LshIndex.append's caller
-          // contract (disjoint ids, like any append-only store) — the
-          // first soak draft violated it and found a real bug for its
-          // trouble (see LshIndex.query's no-id-guard comment)
+          // feed ids live above the seed range: LshIndex.appendHot's
+          // caller contract (disjoint ids, like any append-only store) —
+          // the first soak draft violated it and found a real bug for
+          // its trouble (see LshIndex.queryAgainst's no-id-guard comment)
           (col("value") + idOffset).as("doc_id"),
           // every 20th doc near-dups a SEED doc (history-gate class) —
           // seed choice is a mixing hash so all nSeeds seeds are hit,
@@ -261,27 +237,18 @@ object IngestSoak {
       // cores into the measured leg's first batches — exactly the
       // contention the soak is trying to measure cleanly (close()'s
       // shutdownNow interrupts the stage; the warm index is throwaway)
-      val warmMaint =
-        if (generational) Some(new graft.llm.LshMaintenance(spark, "ingest_warm_idx"))
-        else None
-      val wq = (if (generational) {
-        graft.llm.LshIndex.buildGen(wSeeds, "ingest_warm_idx", buckets)
-        graft.streaming.DocStream.ingestGen(warmFeed, evalDocs,
-          "ingest_warm_idx", wCorpus, warmMaint.get,
+      val warmMaint = new graft.llm.LshMaintenance(spark, "ingest_warm_idx")
+      graft.llm.LshIndex.buildGen(wSeeds, "ingest_warm_idx", buckets)
+      val wq = graft.streaming.DocStream.ingestGen(warmFeed, evalDocs,
+          "ingest_warm_idx", wCorpus, warmMaint,
           watermark = watermark, rotateEvery = rotateEvery)
-      } else {
-        graft.llm.LshIndex.build(wSeeds, "ingest_warm_idx", buckets)
-        graft.streaming.DocStream.ingest(warmFeed, evalDocs,
-          "ingest_warm_idx", wCorpus,
-          watermark = watermark, compactEvery = compactEvery)
-      })
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("5 seconds"))
         .option("checkpointLocation", wCkpt)
         .start()
       try Thread.sleep(warmupSeconds * 1000L)
       finally {
         scala.util.Try(wq.stop())
-        warmMaint.foreach(m => scala.util.Try(m.close()))
+        scala.util.Try(warmMaint.close())
       }
     }
 
@@ -328,17 +295,10 @@ object IngestSoak {
     // burning cores through the ground-truth corpus/index counts
     // below — and a staging failure would otherwise be silently
     // swallowed with the future
-    val mainMaint =
-      if (generational)
-        Some(new graft.llm.LshMaintenance(spark, "ingest_soak_idx"))
-      else None
-    val q = (if (generational)
-      graft.streaming.DocStream.ingestGen(mainFeed, evalDocs,
-        "ingest_soak_idx", corpusDir, mainMaint.get,
+    val mainMaint = new graft.llm.LshMaintenance(spark, "ingest_soak_idx")
+    val q = graft.streaming.DocStream.ingestGen(mainFeed, evalDocs,
+        "ingest_soak_idx", corpusDir, mainMaint,
         watermark = watermark, rotateEvery = rotateEvery)
-    else
-      graft.streaming.DocStream.ingest(mainFeed, evalDocs, "ingest_soak_idx",
-        corpusDir, watermark = watermark, compactEvery = compactEvery))
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("5 seconds"))
       .option("checkpointLocation", ckpt)
       .start()
@@ -349,7 +309,7 @@ object IngestSoak {
     try Thread.sleep(seconds * 1000L)
     finally {
       scala.util.Try(q.stop())
-      mainMaint.foreach(m => scala.util.Try(m.close()))
+      scala.util.Try(mainMaint.close())
     }
     spark.streams.removeListener(listener)
     jobLog.foreach { l =>
@@ -366,8 +326,7 @@ object IngestSoak {
     // "does not keep up" verdict), not crash the sweep.
     val corpusRows = scala.util.Try(spark.read.parquet(corpusDir).count())
       .getOrElse(0L)
-    // generational layout: admitted docs live across cold ∪ merging ∪
-    // hot (which one depends on where the background merge was at stop)
+    // admitted docs live across cold ∪ merging ∪ hot (which one depends on where the background merge was at stop)
     val indexRows = Seq(
         graft.llm.LshIndex.setsTable("ingest_soak_idx"),
         graft.llm.LshIndex.mergingSetsTable("ingest_soak_idx"),
@@ -394,7 +353,6 @@ object IngestSoak {
     val summary =
       s"""{"metric":"ingest_soak","feed_docs_per_sec":$rate,"seconds":$seconds,""" +
       s""""watermark":"$watermark","state_plateau":$statePlateau,""" +
-      s""""compact_every":$compactEvery,"generational":$generational,""" +
       s""""rotate_every":$rotateEvery,"warmup_seconds":$warmupSeconds,""" +
       s""""buckets":$buckets,"rebucket_from":${rebucketFrom.getOrElse(0)},""" +
       s""""cpus":$cpus,"seed_docs":$nSeeds,"batches":${rates.length},""" +
@@ -406,8 +364,8 @@ object IngestSoak {
       s""""batch_latency_p95_ms":${latPct(0.95)},""" +
       s""""batch_latency_max_ms":${latPct(1.0)},""" +
       // the UNSORTED latency series (tail 60) is the flat-vs-corpus
-      // evidence the generational leg exists to show: under the mono
-      // loop the compact batches march upward with corpus size
+      // evidence the generational loop exists to show: under the old
+      // in-trigger compaction, batches marched upward with corpus size
       s""""latency_series_ms":${latencies.takeRight(60).mkString("[", ",", "]")},""" +
       s""""state_rows_series":${stateRows.takeRight(40).mkString("[", ",", "]")},""" +
       s""""state_rows_max":${if (stateRows.isEmpty) -1L else stateRows.max},""" +

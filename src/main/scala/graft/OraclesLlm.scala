@@ -929,8 +929,8 @@ object OraclesLlm {
        |    END)::BIGINT AS removed_tokens
        |FROM corpus c LEFT JOIN sb v USING (doc_id)""".stripMargin
 
-  /** Stored-index near-dup probe ([[graft.llm.LshIndex.query]] after
-    * `build`): the cross-batch slice of the minhash pair set — stored
+  /** Stored-index near-dup probe ([[graft.llm.LshIndex.queryGen]]
+    * after `buildGen`): the cross-batch slice of the minhash pair set — stored
     * (base-corpus) doc on the left, injected-batch doc on the right.
     * Per-pair candidate generation and verification make this slice
     * independent of whether the rest of the corpus was banded in the
@@ -956,8 +956,8 @@ object OraclesLlm {
        |  AND doc_a % 20 <> 0""".stripMargin
 
   /** Kept side of the stored-index history gate
-    * ([[graft.llm.LshIndex.gate]], the per-micro-batch check
-    * [[graft.streaming.DocStream.ingest]] runs): batch docs (ids ≥
+    * ([[graft.llm.LshIndex.gateGen]], the per-micro-batch check
+    * [[graft.streaming.DocStream.ingestGen]] runs): batch docs (ids ≥
     * 100000) with NO verified ≥0.8-Jaccard partner in the stored base
     * corpus. The +300000 rows keep only their first two tokens —
     * below shingle size, so they have no defined n-gram Jaccard and
@@ -1024,17 +1024,24 @@ object OraclesLlm {
        |FROM bc GROUP BY 1, 2""".stripMargin
 
   /** Physical-fragmentation lifecycle of the stored LSH index
-    * ([[graft.llm.LshIndex.bucketStats]]'s `n_files`/`avg_file_rows`
-    * columns through build → 3 appends → compact). File layout itself
-    * is Spark-physical and invisible to an independent SQL engine, so
-    * the oracle checks it two ways: the INVARIANTS the lifecycle must
-    * satisfy (appends fragment, compact restores one file per
-    * non-empty bucket, rows survive, avg_file_rows = rows div files)
-    * are emitted by the engine as 0/1 metrics and pinned to 1 here,
+    * (buildGen → 3 hot appends → one merge cycle → delete → purge).
+    * File layout itself is Spark-physical and invisible to an
+    * independent SQL engine, so the oracle checks it two ways: the
+    * INVARIANTS the lifecycle must satisfy (appends fragment, the
+    * merge restores one file per non-empty bucket, rows survive, the
+    * stats query's `max_bucket_files` counts the appends, the
+    * maintenance driver surfaces and lands the purge) are emitted by
+    * the engine as 0/1 metrics and pinned to 1 here,
     * while the stored tables' ROW counts — what the files must add up
     * to — are recomputed from scratch via the shared shingle/band CTE
     * chain over the same sub-corpus (doc_id % 20 < 4). */
   val lshFragStats: String = {
+    // two metric names outlive the stats columns they were named for:
+    // `avg_file_rows_reconciles` checks that bucketStatsGen reports the
+    // hot generation's max_bucket_files as the 3 appends, and
+    // `stats_surface_purge_debt` that LshMaintenance.recover re-arms
+    // the purge from the pending tombstones and maybeCommit lands it
+    //
     // post-purge corpus: the lifecycle deletes the %20 == 1 append
     // slice and purges, so the final stored rows are the chain over
     // the sub-corpus MINUS that slice; the pending-tombstone count is

@@ -51,7 +51,7 @@ object AnnIndex {
     // the directory survives, and the next saveAsTable (even
     // mode("overwrite"), which is a CREATE to a catalog that has no
     // entry) would fail with LOCATION_ALREADY_EXISTS. Same guard as
-    // LshIndex.build, extended to the parameter tables.
+    // LshIndex.buildGen, extended to the parameter tables.
     val spark = embeddings.sparkSession
     Seq(centroidsTable(name), cellsTable(name), tombstonesTable(name),
         codebookTable(name), codesTable(name),
@@ -84,7 +84,7 @@ object AnnIndex {
     * cells through the bounded [[Similarity.TopKAgg]]. Identical
     * arithmetic to the in-memory path ⇒ identical results.
     *
-    * Probe-side size fallback (the [[LshIndex.query]] contract): the
+    * Probe-side size fallback (the [[LshIndex.queryGen]] contract): the
     * probe frame is `nQueries · nprobe` rows of quantized vectors —
     * parameter-sized for interactive serving, where the broadcast hint
     * is right. A BULK query batch (re-scoring a whole corpus slice)
@@ -277,7 +277,7 @@ object AnnIndex {
     * [[LshIndex.buildGen]]):
     *
     *   1. The cost class the generational layout fixes does not arise
-    *      here. LSH needed it because the ingest loop's in-trigger
+    *      here. LSH needed it because its old ingest loop's in-trigger
     *      compact was O(corpus); AnnIndex's per-batch path ([[append]])
     *      is O(batch) — assign against FROZEN broadcast centroids,
     *      bucketed append — and its two O(corpus) ops ([[recluster]],
@@ -291,10 +291,11 @@ object AnnIndex {
     *      does not exist for IVF. LSH bands/sets are per-doc
     *      deterministic derivations, so partitioning the corpus across
     *      generations partitions the candidate pairs exactly
-    *      (GenerationalLshSpec pins queryGen ≡ mono query). IVF cell
+    *      (GenerationalLshSpec pins queryGen ≡ the from-scratch batch
+    *      operator). IVF cell
     *      assignments depend on TRAINED parameters: a hot generation
     *      would either freeze stale centroids (its recall silently
-    *      diverges from a mono rebuild) or train its own (per-
+    *      diverges from a full rebuild) or train its own (per-
     *      generation probe sets stop being comparable, and merging is
     *      a retrain — the O(corpus) pass again). A hot/cold ANN split
     *      is not answer-preserving, so it would be machinery without
@@ -527,7 +528,7 @@ object AnnIndex {
       .reduce(_.unionAll(_))
       .agg(
         max(when(col("tag") === "cent", col("v"))).as("n_cent"),
-        // purge debt ([[LshIndex.bucketStats]]'s twin column):
+        // purge debt ([[LshIndex.tombstoneCount]]'s twin column):
         // tombstoned vectors still physically present in every cell;
         // 0 when no delete has happened (no tombstones child)
         coalesce(max(when(col("tag") === "tomb", col("v"))), lit(0L))
@@ -636,7 +637,7 @@ object AnnIndex {
     * the index (cells, and the codes/rcodes halves when present) under
     * its existing cent_id bucket spec, one file per non-empty bucket
     * ([[graft.sources.Bucketed.compact]]). Same scale argument as
-    * [[LshIndex.compact]]: a micro-batch append loop grows file counts
+    * [[LshIndex.mergeStage]]: a micro-batch append loop grows file counts
     * linearly in batch count while probe scans pay per-file open cost.
     * Row-level dedup rides along — every appendable row is a per-vector
     * deterministic derivation (assignment against FIXED centroids,

@@ -104,10 +104,6 @@ object EditDistance {
     val q = 2
     require(minLen - q + 1 > d * q,
       s"minLen=$minLen too small for exact q-gram filtering at d=$d")
-    // the heap tiebreak pads pos to two digits (see below)
-    require(titleLen <= 100,
-      s"titleLen=$titleLen: the prefix-selection tiebreak packs pos " +
-        "into two digits")
     val titles = docs
       .select(col("doc_id"), expr(s"substring(text, 1, $titleLen)").as("title"))
       .filter(length(col("title")) >= minLen)
@@ -140,10 +136,12 @@ object EditDistance {
     // saturates at 2⁵⁰, which still yields ONE shared total gram order,
     // and exactness of prefix filtering needs only that all strings
     // share it, not which order it is (the final stage verifies exact
-    // levenshtein either way); tiebreak = gram ∥ pos as two zero-padded
-    // digits — grams are exactly two codepoints and UTF-8 codepoint
-    // encodings are prefix-free, so binary string order ≡ (gram, pos)
-    // and the tiebreak is key-unique (pos is unique per doc).
+    // levenshtein either way); tiebreak = gram ∥ pos zero-padded to
+    // the digit count of the largest pos (titleLen − 1), so every pos
+    // renders at ONE width — grams are exactly two codepoints and UTF-8
+    // codepoint encodings are prefix-free, so binary string order ≡
+    // (gram, pos) and the tiebreak is key-unique (pos is unique per
+    // doc).
     //
     // EXPLICIT-count repartition below the heap (r17's fix, kept): the
     // gram rows are bytes-tiny but CPU-carrying, and AQE's byte-based
@@ -153,6 +151,7 @@ object EditDistance {
     // user-specified partition count is exempt, and
     // hashpartitioning(doc_id, cores) satisfies the operator's
     // ClusteredDistribution so no second exchange appears.
+    val posDigits = math.max(1, titleLen - 1).toString.length
     val graded = qg.join(freq, "gram")
       .repartition(docs.sparkSession.sparkContext.defaultParallelism,
         col("doc_id"))
@@ -160,7 +159,7 @@ object EditDistance {
       .withColumn("ordp", -(col("hot").cast("long") * lit(1L << 51) +
         least(col("freq"), lit(1L << 50))))
       .withColumn("tb",
-        concat(col("gram"), lpad(col("pos").cast("string"), 2, "0")))
+        concat(col("gram"), lpad(col("pos").cast("string"), posDigits, "0")))
     val prefix = graft.plans.TopKPerKey
       .topK(graded, Seq("doc_id"), "ordp", "tb", d * q + 1)
       // a doc is UNSAFE iff its prefix had to include a hot gram; the

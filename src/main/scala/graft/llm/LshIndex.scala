@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * corpus-sized hashing pass should be paid once per document ever,
   * not once per batch.
   *
-  * [[build]] persists the two halves through [[graft.sources.Bucketed]]:
+  * Every index is GENERATIONAL. Each generation persists the two
+  * halves through [[graft.sources.Bucketed]]:
   *   - `<name>_sets`  — (doc_id, sh): each doc's distinct shingle-hash
   *     set, BUCKETED on doc_id — the verification join's key is the
   *     physical layout;
@@ -20,29 +21,36 @@ import org.apache.spark.sql.functions._
   *     BUCKETED on band_key — the candidate join's key is the physical
   *     layout, so probing never reshuffles the corpus side, only the
   *     (small) incoming batch.
+  * [[buildGen]] writes the COLD generation (those two tables) and an
+  * empty HOT one (`_hot` suffix); [[appendHot]] admits batches into
+  * hot; [[rotateHot]] → [[mergeStage]] → [[mergeCommit]] folds hot into
+  * cold (the MERGING generation holds it in between). A freshly built
+  * index is just the case with an empty hot tier, so one read path
+  * serves every caller, from the oracle queries to the ingest loop.
   *
-  * [[query]] answers "which stored docs is each new doc a near-dup
-  * of" from the stored tables alone; [[append]] admits the batch into
-  * the index afterwards. Both tables are per-doc deterministic
-  * derivations, so build(A) + append(B) ≡ build(A ∪ B) unconditionally
-  * (no analog of [[AnnIndex]]'s seed-placement caveat — there are no
+  * [[queryGen]] answers "which stored docs is each new doc a near-dup
+  * of" from the stored tables alone; [[gateGen]] is its kept side.
+  * Both tables are per-doc deterministic derivations, so
+  * buildGen(A) + appendHot(B) ≡ buildGen(A ∪ B) unconditionally (no
+  * analog of [[AnnIndex]]'s seed-placement caveat — there are no
   * trained parameters), and the composed incremental flow is exactly
   * the batch semantics: minhashDedup(A ∪ B) = minhashDedup(A) ∪
-  * query(B vs index(A)) ∪ minhashDedup(B) pair-for-pair, because LSH
-  * candidate generation and Jaccard verification are both per-pair.
-  * LshIndexSpec pins all three equalities; the cross-batch slice is
-  * additionally oracle-checked end-to-end (`lsh_index_query` builds
-  * the index on the base corpus, queries the injected near-dup batch
-  * against the STORED tables, and must reproduce DuckDB's from-scratch
-  * band math row-for-row).
+  * queryGen(B vs index(A)) ∪ minhashDedup(B) pair-for-pair, because
+  * LSH candidate generation and Jaccard verification are both
+  * per-pair. LshIndexSpec and GenerationalLshSpec pin these
+  * equalities against the from-scratch batch operator; the cross-batch
+  * slice is additionally oracle-checked end-to-end (`lsh_index_query`
+  * builds the index on the base corpus, queries the injected near-dup
+  * batch against the STORED tables, and must reproduce DuckDB's
+  * from-scratch band math row-for-row).
   *
-  * [[bucketStats]] is the maintenance signal (the [[AnnIndex.cellStats]]
-  * analog): per-band bucket occupancy. A hot band bucket is the LSH
-  * failure mode — a bucket of c docs contributes c·(c−1)/2 candidate
-  * pairs to every future query, so `max_bucket`/`cand_pairs` growing
-  * superlinearly in corpus size says the band hashes have collapsed
-  * (degenerate text, too-coarse signature) and verification cost, not
-  * recall, is about to dominate.
+  * [[bucketStatsGen]] is the maintenance signal (the
+  * [[AnnIndex.cellStats]] analog): per-generation, per-band bucket
+  * occupancy. A hot band bucket is the LSH failure mode — a bucket of
+  * c docs contributes c·(c−1)/2 candidate pairs to every future query,
+  * so `max_bucket`/`cand_pairs` growing superlinearly in corpus size
+  * says the band hashes have collapsed (degenerate text, too-coarse
+  * signature) and verification cost, not recall, is about to dominate.
   */
 object LshIndex {
 
@@ -51,7 +59,7 @@ object LshIndex {
   def tombstonesTable(name: String): String = name + "_tombstones"
 
   /** The SIZING RULE for an index's bucket count, applied when
-    * [[build]]/[[buildGen]] get `buckets = 0` (the default): bucket
+    * [[buildGen]] gets `buckets = 0` (the default): bucket
     * count is the index's parallelism ceiling, not just layout — a
     * bucketed scan cannot split a bucket across tasks, so the gate's
     * corpus-side probe joins AND the background merge's per-bucket
@@ -69,101 +77,11 @@ object LshIndex {
   private def resolveBuckets(spark: SparkSession, buckets: Int): Int =
     if (buckets > 0) buckets else defaultBuckets(spark)
 
-  /** Build and persist the index — the one corpus-sized
-    * shingle/signature pass this corpus ever pays. Bands derive from
-    * the STORED sets table, so the two tables can never disagree about
-    * a document's shingles. A rebuild over an existing name is a
-    * normal operation (the answer to [[bucketStats]] drift), so stale
-    * state is cleared first — including a leftover managed-table
-    * directory from a PREVIOUS session, which `saveAsTable` would
-    * otherwise refuse (the in-memory catalog forgets the table, the
-    * warehouse directory survives, LOCATION_ALREADY_EXISTS).
-    *
-    * `buckets = 0` (the default) applies [[defaultBuckets]]' sizing
-    * rule. Both writes repartition on the bucket key first, so a
-    * fresh build lands EXACTLY one file per non-empty bucket — the
-    * compacted ideal, and the invariant that keeps
-    * `max_bucket_files` ([[bucketStatsGen]]) a pure append counter. */
-  def build(docs: DataFrame, name: String, buckets: Int = 0): Unit = {
-    val spark = docs.sparkSession
-    val n = resolveBuckets(spark, buckets)
-    Seq(setsTable(name), bandsTable(name), tombstonesTable(name)).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), t.toLowerCase)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
-    val sets = Dedup.shingleSets(docs)
-    graft.sources.Bucketed.writeBucketed(
-      sets.repartition(n, sets("doc_id")), setsTable(name), "doc_id", n)
-    val bands = Dedup.lshBands(spark.table(setsTable(name)))
-    graft.sources.Bucketed.writeBucketed(
-      bands.repartition(n, bands("band_key")),
-      bandsTable(name), "band_key", n)
-  }
-
-  /** Admit a batch into the index: one hashing pass over the NEW docs
-    * only, appended to both bucketed tables under their existing bucket
-    * specs (the co-location contract survives incremental loads). The
-    * bucket counts are read from the STORED tables' catalog entries,
-    * never a caller parameter — a caller guessing wrong would make
-    * every subsequent append throw on the mismatched spec and
-    * permanently stall an ingest loop built on this call.
-    * Caller contract: batch doc_ids are disjoint from stored ones —
-    * same as any append-only store. */
-  def append(docs: DataFrame, name: String): Unit = {
-    val sets = Dedup.shingleSets(docs)
-    // sets feed both writes; cache so the batch is hashed exactly once
-    sets.persist()
-    try appendFromSets(sets, name)
-    finally sets.unpersist()
-  }
-
-  /** [[append]] from an already-materialized (doc_id, sh) sets frame —
-    * the entry point for callers that have ALREADY paid the batch's
-    * shingling pass (the ingest loop derives sets once and reuses them
-    * across gate and append; re-deriving here would double the batch's
-    * dominant cost). The caller should hand over a cached frame. */
-  def appendFromSets(sets: DataFrame, name: String): Unit = {
-    val spark = sets.sparkSession
-    // onePerBucket: loop-shaped appends must not leave task-count
-    // times bucket-count files per batch (see Bucketed.appendBucketed)
-    graft.sources.Bucketed.appendBucketed(
-      sets, setsTable(name), "doc_id",
-      graft.sources.Bucketed.bucketCount(spark, setsTable(name)),
-      onePerBucket = true)
-    graft.sources.Bucketed.appendBucketed(
-      Dedup.lshBands(sets), bandsTable(name), "band_key",
-      graft.sources.Bucketed.bucketCount(spark, bandsTable(name)),
-      onePerBucket = true)
-  }
-
-  /** Collapse append fragmentation: rewrite both bucketed tables under
-    * their existing bucket specs, one file per bucket
-    * ([[graft.sources.Bucketed.compact]]). At a 15 s trigger the
-    * ingest loop appends ~5,760 times a day, each adding files to
-    * every touched bucket — without periodic compaction the probe-side
-    * scan cost grows with BATCH COUNT instead of corpus size, which is
-    * the round-6 ingest loop's own scale-killer. Row-level dedup rides
-    * along: both tables are per-doc deterministic derivations, so the
-    * byte-identical rows an at-least-once replayed append leaves
-    * behind vanish losslessly, making compaction the garbage collector
-    * for the ingest loop's failure window as well as its file counts.
-    * Query results are unchanged by construction (same rows, same
-    * layout contract) — LshIndexSpec pins query-after ≡ query-before. */
-  def compact(spark: SparkSession, name: String): Unit = {
-    graft.sources.Bucketed.compact(
-      spark, setsTable(name), "doc_id", dedup = true)
-    graft.sources.Bucketed.compact(
-      spark, bandsTable(name), "band_key", dedup = true)
-  }
-
   /** DELETE from the index — the right-to-be-forgotten path a training
     * corpus store must have (a takedown/GDPR request cannot wait for,
     * or pay, a corpus-sized rewrite): the doc_ids land in a TOMBSTONE
     * table (tiny — one long per deleted doc) and every subsequent
-    * [[query]]/[[gate]] excludes tombstoned stored docs via a broadcast
+    * [[queryGen]]/[[gateGen]] excludes tombstoned stored docs via a broadcast
     * anti-join on the CANDIDATE set (the cheapest correct point: a
     * tombstoned hot doc stops costing verification immediately). The
     * physical rows survive until [[purgeDeleted]] — the same
@@ -194,11 +112,11 @@ object LshIndex {
     }
 
   /** Physically drop tombstoned rows from both bucketed tables and
-    * clear the tombstone table — the delete's [[compact]] analog, run
-    * on the same maintenance cadence; afterwards [[query]] answers
+    * clear the tombstone table — the delete's physical half, run on
+    * the maintenance cadence; afterwards [[queryGen]] answers
     * identically but without the per-query anti-join. Fault-tolerant
-    * the same way compact is ([[graft.sources.Bucketed
-    * .rewriteInPlace]]): survivors are staged to a `__compact` table
+    * through [[graft.sources.Bucketed.rewriteInPlace]]: survivors
+    * are staged to a `__compact` table
     * while the live table still exists, then swapped in via
     * RENAME-RENAME-DROP — no crash point loses the index (the
     * round-13 DROP-then-rewrite version destroyed it on any failure
@@ -242,17 +160,12 @@ object LshIndex {
         s"index $name has a merge in flight - purge after mergeCommit " +
           "(or repairGen): a purge racing the staged merge would " +
           "resurrect deleted rows")
-      val gens = Seq(setsTable(name) -> "doc_id",
-          bandsTable(name) -> "band_key") ++
-        (if (spark.catalog.tableExists(hotSetsTable(name)) &&
-             spark.catalog.tableExists(hotBandsTable(name)))
-          Seq(hotSetsTable(name) -> "doc_id",
-            hotBandsTable(name) -> "band_key")
-        else Nil)
-      gens.foreach { case (t, key) =>
-        graft.sources.Bucketed.rewriteInPlace(spark, t, key,
-          _.join(broadcast(tomb), Seq("doc_id"), "left_anti"))
-      }
+      // a table without data files has nothing to purge
+      generationTables(spark, name).filter { case (t, _) => hasFiles(spark, t) }
+        .foreach { case (t, key) =>
+          graft.sources.Bucketed.rewriteInPlace(spark, t, key,
+            _.join(broadcast(tomb), Seq("doc_id"), "left_anti"))
+        }
       spark.sql(s"DROP TABLE IF EXISTS ${tombstonesTable(name)}")
     }
 
@@ -289,64 +202,53 @@ object LshIndex {
       s"index $name has a merge in flight - rebucket after mergeCommit " +
         "(or route through LshMaintenance.requestRebucket): the staged " +
         "merge slices files under the old bucket count")
-    val tables = Seq(setsTable(name) -> "doc_id",
-        bandsTable(name) -> "band_key") ++
-      (if (spark.catalog.tableExists(hotSetsTable(name)) &&
-           spark.catalog.tableExists(hotBandsTable(name)))
-        Seq(hotSetsTable(name) -> "doc_id",
-          hotBandsTable(name) -> "band_key")
-      else Nil)
-    tables.foreach { case (t, key) =>
+    generationTables(spark, name).foreach { case (t, key) =>
       graft.sources.Bucketed.rewriteInPlace(spark, t, key, identity,
         newBuckets = newBuckets)
     }
   }
 
-  /** Near-dup pairs between a NEW batch and the stored corpus:
-    * candidates from band-key collisions against the stored bands
-    * table, deduped BEFORE verification, then exact-Jaccard verified
-    * against the stored sets table. Output: (doc_a = stored doc,
-    * doc_b = batch doc, inter_size, union_size), one row per pair with
-    * Jaccard ≥ minJaccardPm/1000 — the same integer cross-multiplied
-    * compare as [[Dedup.minhashDedup]].
-    *
-    * The batch side is explicitly BROADCAST in both the candidate and
-    * verification joins: a batch is one trigger's worth of docs while
-    * the corpus is unbounded, so the corpus side must stream through
-    * linear scans with no shuffle and no sort. Left to size estimates,
-    * a large batch tips the planner into sort-merge — which re-sorts
-    * the ACCUMULATING corpus tables on every probe, a per-batch cost
-    * that grows with corpus size (the ingest soak measured the cliff:
-    * throughput fell as the corpus grew, superlinearly with batch
-    * size).
-    *
-    * Above `maxBroadcastDocs` the broadcast contract would break
-    * (Spark's 8 GB broadcast cap ≈ 10M docs' band rows, and every
-    * executor holds a copy), so the hints are DROPPED and the planner
-    * falls back to shuffle joins. The corpus side still never
-    * reshuffles: the bands table's HashPartitioning(band_key) already
-    * satisfies the candidate join's clustered distribution over
-    * (band, band_key) — band_key is a subset of the join keys — and
-    * the sets table is bucketed on doc_a's key, so only the BATCH side
-    * exchanges. The row count is measured with one `count()` over the
-    * batch — noise next to its shingling pass, and free when the
-    * caller hands over a cached frame ([[graft.streaming.DocStream
-    * .ingestBatch]] does). `maxBroadcastDocs <= 0` forces the fallback
-    * (the spec uses it to pin plan-shape and result equality on both
-    * sides of the threshold). */
-  def query(newDocs: DataFrame, name: String, minJaccardPm: Int = 800,
-            maxBroadcastDocs: Long = 4L * 1000 * 1000): DataFrame = {
-    val spark = newDocs.sparkSession
-    val small = newDocs.count() <= maxBroadcastDocs
-    val newSets = Dedup.shingleSets(newDocs)
-    queryAgainst(newSets, Dedup.lshBands(newSets),
-      spark.table(setsTable(name)), spark.table(bandsTable(name)),
-      name, minJaccardPm, small)
-  }
+  /** (table, bucket key) of every generation a between-merges rewrite
+    * ([[purgeDeleted]], [[rebucket]]) must cover: cold, plus hot when
+    * both its halves exist (a half-rotated crash state leaves one;
+    * [[repairGen]] heals it). */
+  private def generationTables(spark: SparkSession, name: String)
+      : Seq[(String, String)] =
+    Seq(setsTable(name) -> "doc_id", bandsTable(name) -> "band_key") ++
+      (if (spark.catalog.tableExists(hotSetsTable(name)) &&
+           spark.catalog.tableExists(hotBandsTable(name)))
+        Seq(hotSetsTable(name) -> "doc_id", hotBandsTable(name) -> "band_key")
+      else Nil)
 
-  /** The probe core, against EXPLICIT stored relations — [[query]]'s
-    * body, factored so the generational read path can run it once per
-    * generation without re-shingling the batch. */
+  /** Near-dup pairs between a NEW batch's (sets, bands) and ONE stored
+    * generation: candidates from band-key collisions against the
+    * stored bands table, deduped BEFORE verification, then
+    * exact-Jaccard verified against the stored sets table. Output:
+    * (doc_a = stored doc, doc_b = batch doc, inter_size, union_size),
+    * one row per pair with Jaccard ≥ minJaccardPm/1000 — the same
+    * integer cross-multiplied compare as [[Dedup.minhashDedup]].
+    * [[queryGenFrom]] runs it once per generation over one shingling
+    * of the batch.
+    *
+    * With `small` the batch side is explicitly BROADCAST in both the
+    * candidate and verification joins: a batch is one trigger's worth
+    * of docs while the corpus is unbounded, so the corpus side must
+    * stream through linear scans with no shuffle and no sort. Left to
+    * size estimates, a large batch tips the planner into sort-merge —
+    * which re-sorts the ACCUMULATING corpus tables on every probe, a
+    * per-batch cost that grows with corpus size (the ingest soak
+    * measured the cliff: throughput fell as the corpus grew,
+    * superlinearly with batch size).
+    *
+    * Above [[queryGen]]'s `maxBroadcastDocs` the broadcast contract
+    * would break (Spark's 8 GB broadcast cap ≈ 10M docs' band rows,
+    * and every executor holds a copy), so the hints are DROPPED and
+    * the planner falls back to shuffle joins. The corpus side still
+    * never reshuffles: the bands table's HashPartitioning(band_key)
+    * already satisfies the candidate join's clustered distribution
+    * over (band, band_key) — band_key is a subset of the join keys —
+    * and the sets table is bucketed on doc_a's key, so only the BATCH
+    * side exchanges. */
   private def queryAgainst(newSets: DataFrame, newBands: DataFrame,
                            storedSets: DataFrame, storedBands: DataFrame,
                            name: String, minJaccardPm: Int,
@@ -382,36 +284,48 @@ object LshIndex {
       .filter(col("inter_size") * 1000L >= col("union_size") * minJaccardPm)
   }
 
-  // ---- generational (hot/cold) layout: the fix for the in-loop
-  // compaction cost boundary (IngestSoak scaladoc). A mono-generation
-  // index pays an O(corpus) rewrite INSIDE the trigger every compact
-  // cadence, and that cost grows linearly with stream lifetime. Here
-  // appends land in a small HOT generation; the trigger path only ever
-  // pays metadata renames ([[rotateHot]], [[mergeCommit]]); the one
-  // O(corpus) pass ([[mergeStage]]) writes a STAGED copy of the cold
-  // generation, which is race-free to run outside the trigger because
-  // cold and merging receive no writes — only hot does. Queries read
-  // every generation and union the verified pairs (ids are disjoint by
-  // the append contract, so the union is disjoint), and
-  // queryGen ≡ query over a mono index of the same corpus EXACTLY
-  // (bands/sets are per-doc derivations — GenerationalLshSpec pins the
-  // equivalence through every lifecycle phase). [[graft.llm
-  // .LshMaintenance]] drives mergeStage from a maintenance thread and
-  // the commit from the next trigger; [[graft.streaming.DocStream
-  // .ingestGen]] is the loop. ----
+  // ---- generations: appends land in a small HOT generation; the
+  // trigger path only ever pays metadata renames ([[rotateHot]],
+  // [[mergeCommit]]); the one O(corpus) pass ([[mergeStage]]) writes a
+  // STAGED copy of the cold generation, which is race-free to run
+  // outside the trigger because cold and merging receive no writes —
+  // only hot does. Queries read every generation and union the
+  // verified pairs (ids are disjoint by the append contract, so the
+  // union is disjoint), and the answer equals the batch operator's
+  // cross slice over the same corpus EXACTLY (bands/sets are per-doc
+  // derivations — GenerationalLshSpec pins the equivalence through
+  // every lifecycle phase). [[graft.llm.LshMaintenance]] drives
+  // mergeStage from a maintenance thread and the commit from the next
+  // trigger; [[graft.streaming.DocStream.ingestGen]] is the loop. ----
 
   def hotSetsTable(name: String): String = name + "_sets_hot"
   def hotBandsTable(name: String): String = name + "_bands_hot"
   def mergingSetsTable(name: String): String = name + "_sets_merging"
   def mergingBandsTable(name: String): String = name + "_bands_merging"
 
-  /** [[build]] plus an empty hot generation (same bucket specs;
-    * `buckets = 0` applies [[defaultBuckets]]' sizing rule). Also
-    * clears leftover hot/merging/staged tables from a previous
-    * lifecycle — same orphan guard as build's own tables. */
+  /** Build and persist the index — the one corpus-sized
+    * shingle/signature pass this corpus ever pays — as a cold
+    * generation plus an empty hot one (same bucket specs). Bands
+    * derive from the STORED sets table, so the two tables can never
+    * disagree about a document's shingles. A rebuild over an existing
+    * name is a normal operation (the answer to [[bucketStatsGen]]
+    * drift), so stale state is cleared first: every generation's
+    * tables, the tombstones, leftover staged tables, and a leftover
+    * managed-table directory from a PREVIOUS session, which
+    * `saveAsTable` would otherwise refuse (the in-memory catalog
+    * forgets the table, the warehouse directory survives,
+    * LOCATION_ALREADY_EXISTS).
+    *
+    * `buckets = 0` (the default) applies [[defaultBuckets]]' sizing
+    * rule. Both writes repartition on the bucket key first, so a
+    * fresh build lands EXACTLY one file per non-empty bucket — the
+    * compacted ideal, and the invariant that keeps
+    * `max_bucket_files` ([[bucketStatsGen]]) a pure append counter. */
   def buildGen(docs: DataFrame, name: String, buckets: Int = 0): Unit = {
     val spark = docs.sparkSession
-    Seq(hotSetsTable(name), hotBandsTable(name),
+    val n = resolveBuckets(spark, buckets)
+    Seq(setsTable(name), bandsTable(name), tombstonesTable(name),
+        hotSetsTable(name), hotBandsTable(name),
         mergingSetsTable(name), mergingBandsTable(name)).foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
       val loc = new org.apache.hadoop.fs.Path(
@@ -421,7 +335,13 @@ object LshIndex {
     }
     Seq(setsTable(name), bandsTable(name))
       .foreach(graft.sources.Bucketed.clearStaged(spark, _))
-    build(docs, name, buckets)
+    val sets = Dedup.shingleSets(docs)
+    graft.sources.Bucketed.writeBucketed(
+      sets.repartition(n, sets("doc_id")), setsTable(name), "doc_id", n)
+    val bands = Dedup.lshBands(spark.table(setsTable(name)))
+    graft.sources.Bucketed.writeBucketed(
+      bands.repartition(n, bands("band_key")),
+      bandsTable(name), "band_key", n)
     createEmptyHot(spark, name)
   }
 
@@ -448,7 +368,15 @@ object LshIndex {
 
   /** Admit a batch into the HOT generation — the only tables the
     * ingest loop ever writes, so the cold merge can run concurrently.
-    * Same disjoint-ids caller contract as [[append]]. */
+    * The bucket counts are read from the STORED tables' catalog
+    * entries, never a caller parameter — a caller guessing wrong would
+    * make every subsequent append throw on the mismatched spec and
+    * permanently stall an ingest loop built on this call.
+    * `onePerBucket`: loop-shaped appends must not leave task-count
+    * times bucket-count files per batch (see
+    * [[graft.sources.Bucketed.appendBucketed]]). Caller contract:
+    * batch doc_ids are disjoint from stored ones — same as any
+    * append-only store. */
   def appendHot(docs: DataFrame, name: String): Unit = {
     val sets = Dedup.shingleSets(docs)
     sets.persist()
@@ -465,9 +393,17 @@ object LshIndex {
     } finally sets.unpersist()
   }
 
+  /** Whether a table has any data file — driver-side listing of its
+    * own file index, no job. An empty generation contributes nothing
+    * to a probe or a rewrite, so skipping it keeps a fresh index
+    * (empty hot tier) as cheap as a single-generation one. */
+  private def hasFiles(spark: SparkSession, table: String): Boolean =
+    spark.table(table).inputFiles.nonEmpty
+
   /** Every live generation's (sets, bands) relations: cold, plus the
     * merging generation while a merge is in flight, plus hot. Each
-    * optional generation is included only when BOTH its tables exist:
+    * optional generation is included only when its bands table has
+    * data (no band rows, no candidates) and BOTH its tables exist:
     * a crash between [[rotateHot]]'s two renames leaves exactly one of
     * the merging/hot halves behind, and gating on one table alone made
     * queryGen THROW in that state (r14 advisor finding). In the
@@ -478,7 +414,8 @@ object LshIndex {
   private def generations(spark: SparkSession, name: String)
       : Seq[(DataFrame, DataFrame)] = {
     def both(sets: String, bands: String): Seq[(DataFrame, DataFrame)] =
-      if (spark.catalog.tableExists(sets) && spark.catalog.tableExists(bands))
+      if (spark.catalog.tableExists(sets) && spark.catalog.tableExists(bands) &&
+          hasFiles(spark, bands))
         Seq((spark.table(sets), spark.table(bands)))
       else Nil
     (spark.table(setsTable(name)), spark.table(bandsTable(name))) +:
@@ -525,11 +462,20 @@ object LshIndex {
     }
   }
 
-  /** [[query]] over every generation: the batch is shingled ONCE (the
-    * dominant batch cost — persisted across the per-generation probe
-    * joins and released after the caller's action), each generation is
-    * probed with its own co-located joins, and the verified pairs
-    * union (disjoint by the id contract). */
+  /** Near-dup pairs between a NEW batch and the stored corpus
+    * ([[queryAgainst]]'s output shape), over every generation: the
+    * batch is shingled ONCE (the dominant batch cost — persisted across
+    * the per-generation probe joins and released after the caller's
+    * action), each generation is probed with its own co-located joins,
+    * and the verified pairs union (disjoint by the id contract).
+    *
+    * `maxBroadcastDocs` picks the probe joins' strategy (see
+    * [[queryAgainst]]); the batch's row count is measured with one
+    * `count()` — noise next to its shingling pass, and free when the
+    * caller hands over a cached frame ([[graft.streaming.DocStream
+    * .ingestBatchGen]] does). `maxBroadcastDocs <= 0` forces the
+    * shuffle fallback (LshIndexSpec uses it to pin plan shape and
+    * result equality on both sides of the threshold). */
   def queryGen(newDocs: DataFrame, name: String, minJaccardPm: Int = 800,
                maxBroadcastDocs: Long = 4L * 1000 * 1000): DataFrame =
     queryGenFrom(newDocs, name, minJaccardPm,
@@ -583,7 +529,19 @@ object LshIndex {
     spark.catalog.tableExists(mergingSetsTable(name)) &&
       spark.catalog.tableExists(mergingBandsTable(name))
 
-  /** [[gate]] over every generation — the ingest loop's kept-side form.
+  /** History gate: the KEPT side of [[queryGen]] — the batch rows with
+    * NO verified near-dup in any generation of the stored corpus, the
+    * form an ingest loop actually consumes
+    * ([[graft.streaming.DocStream.ingestGen]] runs it per
+    * micro-batch). Docs with fewer than ShingleK tokens — empty, NULL,
+    * or near-empty text — pass vacuously: they have no defined n-gram
+    * Jaccard, so there is nothing to collide (the quality gate, not
+    * the dedup gate, is what drops junk). The flagged set is
+    * `distinct` BEFORE the anti join, so duplicate band collisions (or
+    * duplicate index entries from a replayed append) cannot change the
+    * kept set; it is bounded by the batch, so it follows the probe
+    * joins' broadcast-vs-shuffle decision.
+    *
     * The sizing count runs FIRST (see [[queryGenFrom]]): the next
     * action after this returns must be the caller's consuming one. */
   def gateGen(batch: DataFrame, name: String, minJaccardPm: Int = 800,
@@ -620,7 +578,11 @@ object LshIndex {
     * because neither input relation receives writes (appends go to the
     * fresh hot) and nothing is swapped yet — this is the call a
     * maintenance thread runs OUTSIDE the trigger. Row-level dedup
-    * rides along (replayed-append garbage collection, as [[compact]]).
+    * rides along: both tables are per-doc deterministic derivations,
+    * so the byte-identical rows an at-least-once replayed append
+    * leaves behind vanish losslessly — the merge is the garbage
+    * collector for the ingest loop's failure window as well as for its
+    * file counts.
     * Not idempotent-in-flight — rerunning after a crash restarts the
     * staged write from scratch, which is safe (clearStaged).
     *
@@ -773,52 +735,13 @@ object LshIndex {
     }
   }
 
-  /** History gate: the KEPT side of [[query]] — the batch rows with NO
-    * verified near-dup in the stored corpus, the form an ingest loop
-    * actually consumes ([[graft.streaming.DocStream.ingest]] runs it
-    * per micro-batch). Docs with fewer than ShingleK tokens — empty,
-    * NULL, or near-empty text — pass vacuously: they have no defined
-    * n-gram Jaccard, so there is nothing to collide (the quality gate,
-    * not the dedup gate, is what drops junk). The flagged set is
-    * `distinct` BEFORE the anti join, so duplicate band collisions (or
-    * duplicate index entries from a replayed append — see [[append]])
-    * cannot change the kept set. */
-  def gate(batch: DataFrame, name: String, minJaccardPm: Int = 800,
-           maxBroadcastDocs: Long = 4L * 1000 * 1000): DataFrame = {
-    val flagged = query(batch, name, minJaccardPm, maxBroadcastDocs)
-      .select(col("doc_b").as("doc_id")).distinct()
-    // the flagged set is bounded by the batch, so it follows the same
-    // broadcast-vs-shuffle decision as the probe joins
-    val small = batch.count() <= maxBroadcastDocs
-    batch.join(if (small) broadcast(flagged) else flagged,
-      Seq("doc_id"), "left_anti")
-  }
-
-  /** Index-maintenance signal from the STORED layout: per-band bucket
-    * occupancy of the bands table, plus the PHYSICAL fragmentation of
-    * that table — `n_files` and `avg_file_rows` (table-level, repeated
-    * on each band row: files belong to hash buckets, not bands). The
-    * two dimensions answer the two maintenance questions: `max_bucket`/
-    * `cand_pairs` growth says the band hashes are collapsing (rebuild
-    * with a different signature); `n_files` growing linearly in batch
-    * count with `avg_file_rows` collapsing toward the batch size says
-    * append fragmentation is eating the probe scan ([[compact]]). */
-  def bucketStats(spark: SparkSession, name: String): DataFrame = {
-    val (nFiles, rows) = graft.sources.Bucketed.fileStats(spark, bandsTable(name))
-    bucketStatsOf(spark.table(bandsTable(name)))
-      .withColumn("n_files", lit(nFiles))
-      .withColumn("avg_file_rows", lit(if (nFiles == 0) 0L else rows / nFiles))
-      // purge debt: tombstoned docs still physically present — every
-      // query pays their anti-join until purgeDeleted reclaims them
-      .withColumn("n_tombstones", lit(tombstoneCount(spark, name)))
-  }
-
   /** Pending tombstones (0 when no delete has happened, or right
-    * after a purge) — the purge-debt signal [[bucketStats]] surfaces. */
+    * after a purge) — the purge-debt signal [[LshMaintenance.recover]]
+    * re-arms a pending purge from. */
   def tombstoneCount(spark: SparkSession, name: String): Long =
     tombstones(spark, name).fold(0L)(_.count())
 
-  /** [[bucketStats]]' generational form: per-generation band-bucket
+  /** The index's maintenance signal: per-generation band-bucket
     * occupancy, tagged cold/merging/hot — the maintenance scheduler's
     * view of WHERE the corpus (and its candidate-pair load) currently
     * lives. The operative readings: `hot`'s share growing past the
@@ -832,9 +755,9 @@ object LshIndex {
     * no trap-prone cross-table aggregate (the union is the OUTPUT).
     *
     * `max_bucket_files` (per generation, repeated on each band row
-    * like [[bucketStats]]'s table-level columns) is the PHYSICAL
-    * parallelism-pressure signal: the deepest per-bucket file stack of
-    * that generation's bands table. [[build]]/[[compact]]/[[mergeStage]]
+    * like a table-level column) is the PHYSICAL parallelism-pressure
+    * signal: the deepest per-bucket file stack of that generation's
+    * bands table. [[buildGen]]/[[mergeStage]]/[[rebucket]]
     * leave exactly 1; every `onePerBucket` append adds exactly 1 to
     * each bucket it touches — so the hot generation's reading counts
     * appends since the last rotate, and a value far above the rotate
@@ -864,7 +787,8 @@ object LshIndex {
       .map(m => if (m.isEmpty) 0L else m.values.map(_.size).max.toLong)
       .getOrElse(spark.table(table).inputFiles.length.toLong)
 
-  /** [[bucketStats]] over any (doc_id, band, band_key) band relation —
+  /** Per-band bucket occupancy over any (doc_id, band, band_key) band
+    * relation ([[bucketStatsGen]]'s per-generation core) —
     * shared by the stored-index path and the batch oracle query. Two
     * slim hash aggregations; the first is on the bands table's own
     * bucket key, so the stored path aggregates exchange-free. */

@@ -5,11 +5,11 @@ import java.util.concurrent.{ExecutorService, Executors, Future => JFuture}
 import org.apache.spark.sql.SparkSession
 
 /** The maintenance driver that puts the generational (hot/cold)
-  * [[LshIndex]] under a streaming ingest loop — the piece that retires
-  * the in-loop-compaction boundary IngestSoak measured (mono-index
-  * compaction is an O(corpus) rewrite INSIDE the trigger, so its batch
-  * latency grows linearly with stream lifetime: 14.8 s at ~1.5 M
-  * corpus rows → 17.6 s at ~2.7 M in the r14 green control).
+  * [[LshIndex]] under a streaming ingest loop — the piece that keeps
+  * the index's O(corpus) compaction off the trigger (compacting INSIDE
+  * the trigger made batch latency grow linearly with stream lifetime:
+  * 14.8 s at ~1.5 M corpus rows → 17.6 s at ~2.7 M in the r14 soak of
+  * the single-tier index this layout replaced).
   *
   * Split of labor, by cost class:
   *   - TRIGGER PATH (called from `foreachBatch`, must stay O(metadata)

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -38,11 +38,6 @@ object Multimodal {
     .add("sample_rate", IntegerType).add("duration_ms", LongType)
     .add("format", StringType)
 
-  final case class Meta(width: Int, height: Int, sample_rate: Int,
-                        duration_ms: Long, format: String)
-  final case class MediaRow(media_id: Long, kind: String,
-                            bytes: Array[Byte], meta: Meta)
-
   /** Deterministic synthetic media over `documents`: image rows carry a
     * REAL encoded BMP whose blue channel is the document text, audio
     * rows a REAL PCM WAV, video rows the utf-8 text as an opaque
@@ -52,41 +47,45 @@ object Multimodal {
     * byte-identical payloads). Metadata carries the real image dims /
     * sample rate; video keeps synthetic frame dims for the
     * metadata-only planners. The offline analog of reading a media
-    * directory with `format("binaryFile")`. */
+    * directory with `format("binaryFile")`.
+    *
+    * kind and every metadata field are integer functions of doc_id,
+    * so they are NATIVE column expressions (the [[MediaCodec]]
+    * formulas, restated); only `bytes` runs the encoders, as a UDF
+    * column that column pruning drops whenever nothing reads it. A
+    * metadata-only query (`media_meta`, `resize_plan`,
+    * `frame_sample`) therefore plans a pure projection over the scan:
+    * no encoder and no exchange. Callers that DO read the bytes
+    * spread the doc scan first (see SparkEntry's `payloadMedia`). */
   def syntheticMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // spread BEFORE the generator map (guide §2.5 input skew): the BMP/
-    // WAV encoders below are the expensive per-row work of the whole
-    // media family, and on the driver-layout tables (one parquet file,
-    // one row group) the scan yields a SINGLE task — the r18 event log
-    // showed media_kind_stats as one 0.74 s task with 31 cores idle.
-    // On a production multi-split layout the guard is the identity.
-    graft.Tables.spread(docs.select(col("doc_id"), col("text")))
-      .as[(Long, String)].map {
-      case (id, text) =>
-        val m4 = ((id % 4) + 4) % 4
-        val kind = m4 match {
-          case 0 | 3 => "image"
-          case 1     => "audio"
-          case _     => "video"
-        }
-        val bytes = kind match {
-          case "image" => MediaCodec.encodeBmp(id, text)
-          case "audio" => MediaCodec.encodeWav(id, text.length)
-          case _       => text.getBytes("UTF-8")
-        }
-        val (w, h) =
-          if (kind == "image") MediaCodec.imageDims(id)
-          else (m4.toInt * 160 + 320, m4.toInt * 90 + 180)
-        val rate = if (kind == "audio") MediaCodec.audioRate(id) else 44100
-        val fmt = kind match {
-          case "image" => "bmp"; case "audio" => "wav"; case _ => "mp4"
-        }
-        MediaRow(id, kind, bytes,
-          Meta(w, h, rate, (id % 30) * 1000 + 1000, fmt))
-    }.toDF()
+    val id = col("doc_id")
+    val m4 = pmod(id, lit(4L)).cast("int")
+    val kind = when(m4 === 0 || m4 === 3, "image")
+      .when(m4 === 1, "audio").otherwise("video")
+    val isImage = kind === "image"
+    val isAudio = kind === "audio"
+    val m8 = (id % 8L).cast("int")
+    docs.select(
+      id.as("media_id"),
+      kind.as("kind"),
+      encodePayload(id, kind, col("text")).as("bytes"),
+      struct(
+        when(isImage, m8 * 2 + 16).otherwise(m4 * 160 + 320).as("width"),
+        when(isImage, m8 + 12).otherwise(m4 * 90 + 180).as("height"),
+        when(isAudio, expr("8000 + (cast(doc_id % 16 as int) div 4) * 4000"))
+          .otherwise(44100).cast("int").as("sample_rate"),
+        ((id % 30L) * 1000L + 1000L).as("duration_ms"),
+        when(isImage, "bmp").when(isAudio, "wav").otherwise("mp4")
+          .as("format")).as("meta"))
   }
+
+  /** The payload encoders behind [[syntheticMedia]]'s `bytes`. */
+  private val encodePayload = udf((id: Long, kind: String, text: String) =>
+    kind match {
+      case "image" => MediaCodec.encodeBmp(id, text)
+      case "audio" => MediaCodec.encodeWav(id, text.length)
+      case _       => text.getBytes("UTF-8")
+    })
 
   /** One decoded row: REAL-decode statistics, payload dropped. All
     * numerics are exact integers (sums/counts/peaks), so the oracle —

@@ -281,7 +281,7 @@ object Similarity {
     * probe_bucket) pair — 9 rows × 16 bytes per vector, never the
     * 64-dim payload — and the bucket join emits slim id pairs;
     * quantized vectors move only in the verification joins, once per
-    * side, mirroring [[graft.llm.LshIndex.query]]'s candidates-then-
+    * side, mirroring [[graft.llm.LshIndex.queryGen]]'s candidates-then-
     * verify shape. Each true pair is matched EXACTLY once (the
     * lower-id side probes: identity probe iff buckets equal, else the
     * unique flipped-bit probe), so no candidate-dedup pass is needed. */

@@ -923,7 +923,7 @@ object Windows {
     *
     * The output carries the two properties that make the pattern
     * trustworthy, each as an oracle-checkable 0/1 metric (the
-    * [[graft.llm.LshIndex.bucketStats]] discipline — invariants as
+    * `lsh_frag_stats` discipline — invariants as
     * data, estimates never leave the engine):
     *  - `merge_invariant`: the week estimate is IDENTICAL whether the
     *    daily sketches are unioned directly or through an intermediate

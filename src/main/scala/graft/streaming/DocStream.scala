@@ -207,7 +207,7 @@ object DocStream {
 
   /** The full ingest loop: [[curate]] in-plan, then per micro-batch a
     * near-dup check against the PERSISTED historical corpus
-    * ([[graft.llm.LshIndex.gate]]) — survivors append to the corpus
+    * ([[graft.llm.LshIndex.gateGen]]) — survivors append to the corpus
     * store AND to the index itself, so each batch near-dups against
     * everything ever admitted, not just the current watermark window.
     *
@@ -215,11 +215,11 @@ object DocStream {
     * gates kill the near-in-time duplicate classes with bounded state;
     * what they cannot see is a near-dup of a doc admitted an hour (or
     * a year) ago. That is exactly what the LSH index stores — and
-    * because [[graft.llm.LshIndex.append]] admits each batch's
-    * survivors before the next batch is gated, the lookback horizon is
-    * "the whole corpus", with per-batch cost bounded by the batch's
-    * own band collisions (the corpus side of both joins rides its
-    * bucketed layout and never reshuffles).
+    * because each batch's survivors land in the index before the next
+    * batch is gated, the lookback horizon is "the whole corpus", with
+    * per-batch cost bounded by the batch's own band collisions (the
+    * corpus side of both joins rides its bucketed layout and never
+    * reshuffles).
     *
     * The history check runs in `foreachBatch` rather than in-plan
     * because its flagged set derives from the batch itself — in-plan
@@ -228,78 +228,7 @@ object DocStream {
     * is plain batch semantics, the same reason the reference's output
     * loop is batch-shaped (S-2).
     *
-    * Failure/replay contract — EXACTLY-ONCE stored effects under
-    * `foreachBatch`'s at-least-once replay, with no transactional
-    * format, from two reinforcing mechanisms:
-    *
-    *   1. The corpus write is an IDEMPOTENT per-batch partition
-    *      overwrite: rows land under `batch_id=<id>/` in dynamic
-    *      partition-overwrite mode, so a replay of batch N replaces
-    *      partition N with the identical recomputed rows instead of
-    *      appending a second copy (and an EMPTY survivor set touches
-    *      no partition at all — dynamic mode only overwrites
-    *      partitions present in the data).
-    *   2. The index append is self-healing through the gate itself:
-    *      [[graft.llm.LshIndex.gate]] deliberately has no id guard, so
-    *      on a FULL replay (crash after both writes committed) every
-    *      previously-admitted doc collides with its own stored copy at
-    *      Jaccard 1.0 and the survivor set is empty — nothing is
-    *      re-appended anywhere.
-    *
-    *    The one remaining window is a crash MIDWAY through
-    *    [[graft.llm.LshIndex.append]]'s two table writes (sets landed,
-    *    bands did not): the replay re-admits the batch, leaving
-    *    byte-identical duplicate rows in the sets table. Gating
-    *    correctness is unaffected (duplicate entries only produce
-    *    duplicate candidate flags, absorbed by the gate's distinct);
-    *    [[graft.llm.LshIndex.compact]]'s full-row dedup is the garbage
-    *    collector for exactly this residue. Closing that last window
-    *    outright needs an atomic multi-table commit — a transactional
-    *    table format, out of scope here and documented as such.
-    *    DocStreamSpec pins the replay contract: the same (batch,
-    *    batchId) through [[ingestBatch]] twice leaves corpus, index
-    *    tables, and query answers identical to once.
-    *
-    * Caller contract: [[graft.llm.LshIndex.build]] must have run once
-    * (possibly on an empty seed corpus) before the query starts.
-    *
-    * SCALE NOTE: prefer [[ingestGen]] for any long-running stream —
-    * this mono loop's `compactEvery` rewrite is O(corpus) INSIDE a
-    * trigger, so its latency grows with stream lifetime (the measured
-    * r15 A/B: this loop collapsed at 330 s / 20 k docs/s while the
-    * generational loop held 97% of feed — `artifacts/
-    * GEN_INGEST_AB_R15.json`). This form stays for bounded backfills
-    * and as the semantics reference the generational loop is proven
-    * against. */
-  def ingest(docs: DataFrame, evalDocs: DataFrame, indexName: String,
-             corpusPath: String,
-             watermark: String = "10 minutes",
-             minQuality: Long = 300L,
-             minJaccardPm: Int = 800,
-             compactEvery: Int = 0): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    curate(docs, evalDocs, watermark, minQuality).writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, indexName, corpusPath, minJaccardPm)
-        // periodic fragmentation GC, in-loop so no external scheduler
-        // is needed: every append adds ≥1 file per touched bucket and
-        // probe cost grows with BATCH COUNT, not corpus size
-        // (CompactSoak measures the creep and the restore: 5.2→11.5 s
-        // per batch over 16 appends, back to 4.1 s right after).
-        // Running it inside foreachBatch stalls exactly one trigger
-        // (~7 s at the soak's scale) — the amortized design; it also
-        // garbage-collects any replayed-append residue (compact's
-        // full-row dedup). compactEvery=0 disables.
-        if (compactEvery > 0 && batchId % compactEvery == (compactEvery - 1))
-          graft.llm.LshIndex.compact(batch.sparkSession, indexName)
-      }
-
-  /** [[ingest]] over a GENERATIONAL [[graft.llm.LshIndex]] — the form
-    * that retires [[ingest]]'s one honest scale boundary. The mono
-    * loop's `compactEvery` runs an O(corpus) rewrite INSIDE a trigger,
-    * so that batch's latency grows linearly with stream lifetime
-    * (measured marching 14.8 s → 17.6 s through the r14 green control;
-    * a multi-hour 20 k docs/s stream breaches any trigger SLO
-    * eventually). Here the trigger path pays METADATA ONLY:
+    * The trigger path pays METADATA ONLY for index maintenance:
     *
     *   - every batch starts with [[graft.llm.LshMaintenance
     *     .maybeCommit]] (renames, if the background stage finished);
@@ -318,29 +247,54 @@ object DocStream {
     *     (the stage's jobs are tagged to that pool; inert under FIFO).
     *
     * Batch cost is therefore bounded by the batch's own shingling and
-    * band collisions FOREVER, not just between compactions; the merge
-    * still costs O(corpus) but off-trigger, where it contends for
-    * cores instead of stalling the trigger (the soak's generational
-    * leg measures exactly this: flat p95 through corpus sizes where
-    * the mono loop's compact spikes breached the trigger).
+    * band collisions for the stream's whole lifetime; the merge still
+    * costs O(corpus) but off-trigger, where it contends for cores
+    * instead of stalling the trigger. An earlier single-tier index
+    * compacted INSIDE the trigger, and that loop collapsed at 330 s /
+    * 20 k docs/s while this one held 97% of feed
+    * (`artifacts/GEN_INGEST_AB_R15.json`).
     *
     * Fragmentation control is the rotate itself: each merge rewrites
     * cold to one file per bucket, and hot never accumulates more than
-    * `rotateEvery` batches of appends (the mono loop's file-count
-    * creep, bounded by construction).
+    * `rotateEvery` batches of appends.
     *
-    * Failure/replay contract: identical to [[ingest]] — the corpus
-    * write is an idempotent partition overwrite, the gate self-heals
-    * full replays (a replayed doc collides with its own stored copy in
-    * whichever generation holds it), and a crash midway through
-    * [[graft.llm.LshIndex.appendHot]]'s two writes leaves
-    * byte-identical residue that the next merge's full-row dedup
-    * garbage-collects. Maintenance crash states (half-rotate, staged-
-    * uncommitted, double-read) are healed by [[graft.llm
-    * .LshMaintenance.recover]] at startup, queryable throughout
-    * (GenerationalLshSpec pins each state).
+    * Failure/replay contract — EXACTLY-ONCE stored effects under
+    * `foreachBatch`'s at-least-once replay, with no transactional
+    * format, from two reinforcing mechanisms:
     *
-    * Caller contract: [[graft.llm.LshIndex.buildGen]] ran once;
+    *   1. The corpus write is an IDEMPOTENT per-batch partition
+    *      overwrite: rows land under `batch_id=<id>/` in dynamic
+    *      partition-overwrite mode, so a replay of batch N replaces
+    *      partition N with the identical recomputed rows instead of
+    *      appending a second copy (and an EMPTY survivor set touches
+    *      no partition at all — dynamic mode only overwrites
+    *      partitions present in the data).
+    *   2. The index append is self-healing through the gate itself:
+    *      [[graft.llm.LshIndex.gateGen]] deliberately has no id guard,
+    *      so on a FULL replay (crash after both writes committed) every
+    *      previously-admitted doc collides with its own stored copy at
+    *      Jaccard 1.0 in whichever generation holds it, and the
+    *      survivor set is empty — nothing is re-appended anywhere.
+    *
+    *    The one remaining window is a crash MIDWAY through
+    *    [[graft.llm.LshIndex.appendHot]]'s two table writes (sets
+    *    landed, bands did not): the replay re-admits the batch, leaving
+    *    byte-identical duplicate rows in the hot sets table. Gating
+    *    correctness is unaffected (duplicate entries only produce
+    *    duplicate candidate flags, absorbed by the gate's distinct);
+    *    the next merge's full-row dedup is the garbage collector for
+    *    exactly this residue. Closing that last window outright needs
+    *    an atomic multi-table commit — a transactional table format,
+    *    out of scope here and documented as such. DocStreamSpec pins
+    *    the replay contract: the same (batch, batchId) through
+    *    [[ingestBatchGen]] twice leaves corpus, index tables, and query
+    *    answers identical to once. Maintenance crash states
+    *    (half-rotate, staged-uncommitted, double-read) are healed by
+    *    [[graft.llm.LshMaintenance.recover]] at startup, queryable
+    *    throughout (GenerationalLshSpec pins each state).
+    *
+    * Caller contract: [[graft.llm.LshIndex.buildGen]] ran once
+    * (possibly on an empty seed corpus) before the query starts;
     * `maint` wraps the same index name. */
   def ingestGen(docs: DataFrame, evalDocs: DataFrame, indexName: String,
                 corpusPath: String, maint: graft.llm.LshMaintenance,
@@ -357,9 +311,11 @@ object DocStream {
       }
   }
 
-  /** One micro-batch of [[ingestGen]]'s loop, public for the same
-    * testability reason as [[ingestBatch]] — and so DocStreamSpec can
-    * drive a merge across several triggers with a held-back executor. */
+  /** One micro-batch of [[ingestGen]]'s `foreachBatch` loop, public so
+    * the replay contract is testable (calling it twice with the same
+    * (batch, batchId) must leave every stored effect identical to
+    * calling it once) and so DocStreamSpec can drive a merge across
+    * several triggers with a held-back executor. */
   def ingestBatchGen(batch: DataFrame, batchId: Long, indexName: String,
                      corpusPath: String, maint: graft.llm.LshMaintenance,
                      minJaccardPm: Int = 800, rotateEvery: Int = 8,
@@ -371,10 +327,18 @@ object DocStream {
     // query's clone) so the cache the gate reads through is the one
     // the swap invalidates — see LshMaintenance.maybeCommit's doc.
     maint.maybeCommit(batch.sparkSession)
+    // the DataFrame foreachBatch hands over is a PLAN, not data:
+    // every action re-runs the whole upstream curate pipeline
+    // (quality scan, Bloom probe, both state machines), and the
+    // gate + two writes traverse it ~5 times — measured 5-8×
+    // slower uncached at a 500k-row batch. Cache the curated
+    // batch once; everything downstream reuses it.
     batch.persist()
     try {
       val survivors =
         graft.llm.LshIndex.gateGen(batch, indexName, minJaccardPm)
+      // survivors feed two writes; cache so the batch is shingled,
+      // probed, and verified exactly once
       survivors.persist()
       try {
         survivors.withColumn("batch_id", lit(batchId))
@@ -388,36 +352,5 @@ object DocStream {
     } finally batch.unpersist()
     if (rotateEvery > 0 && batchId % rotateEvery == (rotateEvery - 1))
       maint.rotateAndStage(batch.sparkSession, hotFractionPm)
-  }
-
-  /** One micro-batch of [[ingest]]'s `foreachBatch` loop, public so the
-    * replay contract is testable: calling it twice with the same
-    * (batch, batchId) must leave every stored effect identical to
-    * calling it once (see [[ingest]]'s failure/replay contract). */
-  def ingestBatch(batch: DataFrame, batchId: Long, indexName: String,
-                  corpusPath: String, minJaccardPm: Int = 800): Unit = {
-    // the DataFrame foreachBatch hands over is a PLAN, not data:
-    // every action re-runs the whole upstream curate pipeline
-    // (quality scan, Bloom probe, both state machines), and the
-    // gate + two writes traverse it ~5 times — measured 5-8×
-    // slower uncached at a 500k-row batch. Cache the curated
-    // batch once; everything downstream reuses it.
-    batch.persist()
-    try {
-      val survivors =
-        graft.llm.LshIndex.gate(batch, indexName, minJaccardPm)
-      // survivors feed two writes; cache so the batch is shingled,
-      // probed, and verified exactly once
-      survivors.persist()
-      try {
-        survivors.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(corpusPath)
-        graft.llm.LshIndex.append(
-          survivors.select("doc_id", "text"), indexName)
-      } finally survivors.unpersist()
-    } finally batch.unpersist()
   }
 }

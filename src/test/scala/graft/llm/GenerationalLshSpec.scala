@@ -4,20 +4,33 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The generational (hot/cold) index answers EXACTLY like a
-  * mono-generation index over the same corpus, through every lifecycle
-  * phase — the invariant that makes the out-of-trigger merge design
-  * sound: bands/sets are per-doc derivations, so partitioning the
-  * corpus across generations partitions the band collisions, and the
-  * per-generation verified pairs union back to the mono answer
-  * (disjoint ids ⇒ disjoint pairs). The phases deliberately include a
-  * staged-but-uncommitted merge, which is the state a crashed (or
-  * still-running) maintenance thread leaves behind. */
+/** The generational (hot/cold) index answers EXACTLY like the batch
+  * operator's cross-batch slice over the same corpus, through every
+  * lifecycle phase — the invariant that makes the out-of-trigger merge
+  * design sound: bands/sets are per-doc derivations, so partitioning
+  * the corpus across generations partitions the band collisions, and
+  * the per-generation verified pairs union back to the from-scratch
+  * answer (disjoint ids ⇒ disjoint pairs). The phases deliberately
+  * include a staged-but-uncommitted merge, which is the state a
+  * crashed (or still-running) maintenance thread leaves behind. */
 class GenerationalLshSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  test("queryGen/gateGen ≡ mono query/gate through rotate, staged merge, and commit") {
+  /** The from-scratch reference: [[Dedup.minhashDedup]] over
+    * corpus ∪ batch, restricted to (stored, batch) pairs. Batch ids
+    * sit at ≥ 900000, above every corpus id. */
+  private def crossSlice(corpus: org.apache.spark.sql.DataFrame,
+                         batch: org.apache.spark.sql.DataFrame)
+      : Set[(Long, Long, Long, Long)] =
+    Dedup.minhashDedup(corpus.select("doc_id", "text").unionByName(batch))
+      .collect()
+      .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
+        r.getAs[Long]("inter_size"), r.getAs[Long]("union_size")))
+      .filter(p => p._1 < 900000L && p._2 >= 900000L)
+      .toSet
+
+  test("queryGen/gateGen ≡ the batch operator's cross slice through rotate, staged merge, and commit") {
     assume(new java.io.File(sfDir).isDirectory, "driver testdata not present")
     val docs = graft.Tables.documents(spark, sfDir)
     val a = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
@@ -36,12 +49,10 @@ class GenerationalLshSpec extends SparkSpec {
       .toSet
     def kept(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id").collect().map(_.getLong(0)).toSet
-    def mono(corpus: org.apache.spark.sql.DataFrame, n: String) = {
-      LshIndex.build(corpus, n)
-      (pairs(LshIndex.query(batch, n)), kept(LshIndex.gate(batch, n)))
-    }
-    val (refAB, _) = mono(a.unionByName(b), "lshgen_refab")
-    val (refABC, refKept) = mono(a.unionByName(b).unionByName(c), "lshgen_refabc")
+    val refAB = crossSlice(a.unionByName(b), batch)
+    val refABC = crossSlice(a.unionByName(b).unionByName(c), batch)
+    // the gate keeps every batch doc with no verified stored partner
+    val refKept = kept(batch) -- refABC.map(_._2)
     assert(refAB.nonEmpty && refABC.size > refAB.size,
       "fixture must make every generation contribute pairs")
 
@@ -92,10 +103,8 @@ class GenerationalLshSpec extends SparkSpec {
         concat(lit("dup "), col("text")).as("text"))
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    LshIndex.build(a, "lshcrash_refa")
-    val refA = pairs(LshIndex.query(batch, "lshcrash_refa"))
-    LshIndex.build(a.unionByName(b), "lshcrash_refab")
-    val refAB = pairs(LshIndex.query(batch, "lshcrash_refab"))
+    val refA = crossSlice(a, batch).map(p => (p._1, p._2))
+    val refAB = crossSlice(a.unionByName(b), batch).map(p => (p._1, p._2))
     assert(refA.nonEmpty && refAB.size > refA.size,
       "fixture needs pairs from both generations")
     LshIndex.buildGen(a, "lshcrash")
@@ -129,9 +138,7 @@ class GenerationalLshSpec extends SparkSpec {
     val batch = docs.filter(pmod(col("doc_id"), lit(7)) === 2)
       .select((col("doc_id") + 900000L).as("doc_id"),
         concat(lit("dup "), col("text")).as("text"))
-    LshIndex.build(a.unionByName(b), "lshdbl_ref")
-    val ref = LshIndex.query(batch, "lshdbl_ref").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val ref = crossSlice(a.unionByName(b), batch).map(p => (p._1, p._2))
     LshIndex.buildGen(a, "lshdbl")
     LshIndex.appendHot(b, "lshdbl")
     LshIndex.rotateHot(spark, "lshdbl")
@@ -294,8 +301,8 @@ class GenerationalLshSpec extends SparkSpec {
         concat(lit("dup "), col("text")).as("text"))
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    LshIndex.build(a.unionByName(b).unionByName(c), "lshgen2_ref")
-    val ref = pairs(LshIndex.query(batch, "lshgen2_ref"))
+    val ref = crossSlice(a.unionByName(b).unionByName(c), batch)
+      .map(p => (p._1, p._2))
     LshIndex.buildGen(a, "lshgen2")
     LshIndex.appendHot(b, "lshgen2")
     LshIndex.rotateHot(spark, "lshgen2")

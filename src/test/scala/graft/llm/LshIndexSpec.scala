@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Persisted MinHash/LSH index lifecycle: build persists the shingle
-  * and band halves through the bucketed layout, query answers a new
-  * batch from the stored tables alone, append composes with build so
-  * the incremental flow reproduces the batch operator pair-for-pair. */
+/** Persisted MinHash/LSH index lifecycle: buildGen persists the
+  * shingle and band halves through the bucketed layout, queryGen
+  * answers a new batch from the stored tables alone, appendHot composes
+  * with buildGen so the incremental flow reproduces the batch operator
+  * pair-for-pair, and a merge cycle is the compaction. */
 class LshIndexSpec extends SparkSpec {
 
   private def base: DataFrame = {
@@ -29,9 +30,9 @@ class LshIndexSpec extends SparkSpec {
 
   test("build then query-from-disk equals the cross-batch slice of batch minhashDedup") {
     val d = base
-    LshIndex.build(d, "lshspec")
+    LshIndex.buildGen(d, "lshspec")
     val batch = nearDupBatch(d)
-    val fromDisk = pairs(LshIndex.query(batch, "lshspec"))
+    val fromDisk = pairs(LshIndex.queryGen(batch, "lshspec"))
     // the batch operator over the union, restricted to cross pairs
     val whole = pairs(Dedup.minhashDedup(d.unionAll(batch)))
       .filter(p => p._1 < 100000L && p._2 >= 100000L)
@@ -49,24 +50,24 @@ class LshIndexSpec extends SparkSpec {
 
   test("delete: tombstoned stored docs stop matching; purge answers identically and shrinks") {
     val d = base
-    LshIndex.build(d, "lshspec_del")
+    LshIndex.buildGen(d, "lshspec_del")
     val batch = nearDupBatch(d)
-    val before = pairs(LshIndex.query(batch, "lshspec_del"))
+    val before = pairs(LshIndex.queryGen(batch, "lshspec_del"))
     assert(before.exists(_._1 % 20 == 0),
       "fixture needs at least one pair whose stored side will be deleted")
     import spark.implicits._
     val victims = d.filter(pmod(col("doc_id"), lit(20)) === 0).select("doc_id")
     LshIndex.delete(victims, "lshspec_del")
-    val afterDelete = pairs(LshIndex.query(batch, "lshspec_del"))
+    val afterDelete = pairs(LshIndex.queryGen(batch, "lshspec_del"))
     // exactly the victims' pairs vanish — nothing else moves
     assert(afterDelete === before.filterNot(_._1 % 20 == 0))
     // idempotent: re-deleting the same ids changes nothing
     LshIndex.delete(victims, "lshspec_del")
-    assert(pairs(LshIndex.query(batch, "lshspec_del")) === afterDelete)
+    assert(pairs(LshIndex.queryGen(batch, "lshspec_del")) === afterDelete)
     // purge: physical rewrite, identical answers, rows actually gone
     val rowsBefore = spark.table(LshIndex.setsTable("lshspec_del")).count()
     LshIndex.purgeDeleted(spark, "lshspec_del")
-    assert(pairs(LshIndex.query(batch, "lshspec_del")) === afterDelete)
+    assert(pairs(LshIndex.queryGen(batch, "lshspec_del")) === afterDelete)
     val rowsAfter = spark.table(LshIndex.setsTable("lshspec_del")).count()
     assert(rowsAfter < rowsBefore, "purge must drop the tombstoned rows")
     assert(!spark.catalog.tableExists(
@@ -74,24 +75,27 @@ class LshIndexSpec extends SparkSpec {
       "purge must clear the tombstone table")
     // deleting a doc with no matches is harmless
     LshIndex.delete(Seq(999999999L).toDF("doc_id"), "lshspec_del")
-    assert(pairs(LshIndex.query(batch, "lshspec_del")) === afterDelete)
+    assert(pairs(LshIndex.queryGen(batch, "lshspec_del")) === afterDelete)
   }
 
   test("build(A) + append(B) ≡ build(A ∪ B) — per-doc derivations, no trained state") {
     val d = base
     val (a, b) = (d.filter(col("doc_id") % 2 === 0), d.filter(col("doc_id") % 2 === 1))
-    LshIndex.build(a, "lshspec_inc")
-    LshIndex.append(b, "lshspec_inc")
-    LshIndex.build(d, "lshspec_full")
+    LshIndex.buildGen(a, "lshspec_inc")
+    LshIndex.appendHot(b, "lshspec_inc")
+    LshIndex.buildGen(d, "lshspec_full")
     val probe = nearDupBatch(d)
-    assert(pairs(LshIndex.query(probe, "lshspec_inc")) ==
-      pairs(LshIndex.query(probe, "lshspec_full")))
-    // stored rows agree table-for-table, not just through one probe
+    assert(pairs(LshIndex.queryGen(probe, "lshspec_inc")) ==
+      pairs(LshIndex.queryGen(probe, "lshspec_full")))
+    // stored rows agree table-for-table, not just through one probe:
+    // the incremental index's cold ∪ hot bands are the full build's
     def stored(t: String) = spark.table(t)
       .select("doc_id", "band", "band_key").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(stored(LshIndex.bandsTable("lshspec_inc")) ==
+    assert(stored(LshIndex.bandsTable("lshspec_inc")) ++
+      stored(LshIndex.hotBandsTable("lshspec_inc")) ==
       stored(LshIndex.bandsTable("lshspec_full")))
+    assert(stored(LshIndex.hotBandsTable("lshspec_full")).isEmpty)
   }
 
   test("lifecycle interleaving: delete·append·query ≡ build(A∖X ∪ B)·query; purge composes; deletes reach appended rows") {
@@ -103,43 +107,45 @@ class LshIndexSpec extends SparkSpec {
     val x = a.filter(pmod(col("doc_id"), lit(20)) === 0).select("doc_id")
     val probe = nearDupBatch(d)
     val reference = {
-      LshIndex.build(
+      LshIndex.buildGen(
         a.join(x, Seq("doc_id"), "left_anti").unionByName(b), "lshspec_ref")
-      pairs(LshIndex.query(probe, "lshspec_ref"))
+      pairs(LshIndex.queryGen(probe, "lshspec_ref"))
     }
     assert(reference.nonEmpty)
     // 1. delete BEFORE append: tombstones must not suppress the batch
-    LshIndex.build(a, "lshspec_il1")
+    LshIndex.buildGen(a, "lshspec_il1")
     LshIndex.delete(x, "lshspec_il1")
-    LshIndex.append(b, "lshspec_il1")
-    assert(pairs(LshIndex.query(probe, "lshspec_il1")) == reference)
+    LshIndex.appendHot(b, "lshspec_il1")
+    assert(pairs(LshIndex.queryGen(probe, "lshspec_il1")) == reference)
     // 2. purge between delete and append: physical rewrite composes
-    LshIndex.build(a, "lshspec_il2")
+    LshIndex.buildGen(a, "lshspec_il2")
     LshIndex.delete(x, "lshspec_il2")
     LshIndex.purgeDeleted(spark, "lshspec_il2")
-    LshIndex.append(b, "lshspec_il2")
-    assert(pairs(LshIndex.query(probe, "lshspec_il2")) == reference)
+    LshIndex.appendHot(b, "lshspec_il2")
+    assert(pairs(LshIndex.queryGen(probe, "lshspec_il2")) == reference)
     // 3. delete AFTER append reaches the APPENDED rows: tombstone odd
     //    stored docs (≡ 5 mod 10, all in B) and probe with their dups
     val oddProbe = d.filter(pmod(col("doc_id"), lit(10)) === 5)
       .select((col("doc_id") + 200000L).as("doc_id"),
         concat(lit("dup "), col("text")).as("text"))
-    val beforeOdd = pairs(LshIndex.query(oddProbe, "lshspec_il1"))
+    val beforeOdd = pairs(LshIndex.queryGen(oddProbe, "lshspec_il1"))
     assert(beforeOdd.exists(_._1 % 20 == 5),
       "fixture needs an appended-side pair to delete")
     val y = b.filter(pmod(col("doc_id"), lit(20)) === 5).select("doc_id")
     LshIndex.delete(y, "lshspec_il1")
-    assert(pairs(LshIndex.query(oddProbe, "lshspec_il1")) ==
+    assert(pairs(LshIndex.queryGen(oddProbe, "lshspec_il1")) ==
       beforeOdd.filterNot(_._1 % 20 == 5))
-    // purge-debt observability: bucketStats surfaces the pending
-    // tombstones, purge zeroes them
-    assert(LshIndex.bucketStats(spark, "lshspec_il1")
-      .select("n_tombstones").distinct().head().getLong(0) ==
-      LshIndex.tombstoneCount(spark, "lshspec_il1"))
+    // purge-debt observability: the pending tombstones re-arm a
+    // maintenance driver's purge; purge zeroes them
     assert(LshIndex.tombstoneCount(spark, "lshspec_il1") > 0L)
+    val maint = new LshMaintenance(spark, "lshspec_il1")
+    try {
+      maint.recover()
+      assert(maint.purgeIsPending, "surviving tombstones must re-arm the purge")
+    } finally maint.close()
     LshIndex.purgeDeleted(spark, "lshspec_il1")
     assert(LshIndex.tombstoneCount(spark, "lshspec_il1") == 0L)
-    assert(pairs(LshIndex.query(oddProbe, "lshspec_il1")) ==
+    assert(pairs(LshIndex.queryGen(oddProbe, "lshspec_il1")) ==
       beforeOdd.filterNot(_._1 % 20 == 5))
   }
 
@@ -151,12 +157,12 @@ class LshIndexSpec extends SparkSpec {
     val text = ("the stored document keeps thirty or so distinct tokens " +
       "so that a single prepended token leaves the jaccard similarity " +
       "far above the detection threshold every time").trim
-    LshIndex.build(Seq((7L, text)).toDF("doc_id", "text"), "lshspec_idguard")
+    LshIndex.buildGen(Seq((7L, text)).toDF("doc_id", "text"), "lshspec_idguard")
     val batch = Seq(
       (7L, "dup " + text), // same id as its true stored partner
       (8L, "a wholly different payload sharing no trigram with anything indexed here")
     ).toDF("doc_id", "text")
-    val kept = LshIndex.gate(batch, "lshspec_idguard")
+    val kept = LshIndex.gateGen(batch, "lshspec_idguard")
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(8L), s"got $kept")
   }
@@ -185,28 +191,34 @@ class LshIndexSpec extends SparkSpec {
   test("compact: appends fragment files, compact restores one file per non-empty bucket, answers unchanged") {
     val d = base
     val slices = (0 to 3).map(i => d.filter(pmod(col("doc_id"), lit(4)) === i))
-    LshIndex.build(slices(0), "lshspec_compact")
+    val name = "lshspec_compact"
+    LshIndex.buildGen(slices(0), name)
     val probe = nearDupBatch(d)
-    def frag() = graft.sources.Bucketed.fileStats(
-      spark, LshIndex.bandsTable("lshspec_compact"))
+    // (files, rows) over both generations' bands tables
+    def frag() = {
+      val (cf, cr) = graft.sources.Bucketed.fileStats(spark, LshIndex.bandsTable(name))
+      val (hf, hr) = graft.sources.Bucketed.fileStats(spark, LshIndex.hotBandsTable(name))
+      (cf + hf, cr + hr)
+    }
     val (filesFresh, _) = frag()
-    slices.tail.foreach(sl => LshIndex.append(sl.select("doc_id", "text"), "lshspec_compact"))
+    slices.tail.foreach(sl => LshIndex.appendHot(sl.select("doc_id", "text"), name))
     val (filesFragged, rowsBefore) = frag()
     // each append adds at least one file per touched bucket
     assert(filesFragged > filesFresh,
       s"appends must fragment: fresh=$filesFresh fragged=$filesFragged")
-    val before = pairs(LshIndex.query(probe, "lshspec_compact"))
-    val statsBefore = LshIndex.bucketStatsOf(
-      spark.table(LshIndex.bandsTable("lshspec_compact"))).collect().toSet
+    val before = pairs(LshIndex.queryGen(probe, name))
 
-    LshIndex.compact(spark, "lshspec_compact")
+    // compaction is one merge cycle: hot folds into a rewritten cold
+    LshIndex.rotateHot(spark, name)
+    LshIndex.mergeStage(spark, name)
+    LshIndex.mergeCommit(spark, name)
 
     // one file per NON-EMPTY bucket: Spark's bucket assignment is
     // pmod(murmur3(key), n) — exactly functions.hash (same seed 42) —
     // so the expected file count is computable from the rows themselves
     val buckets = graft.sources.Bucketed.bucketCount(
-      spark, LshIndex.bandsTable("lshspec_compact"))
-    val nonEmpty = spark.table(LshIndex.bandsTable("lshspec_compact"))
+      spark, LshIndex.bandsTable(name))
+    val nonEmpty = spark.table(LshIndex.bandsTable(name))
       .select(countDistinct(pmod(hash(col("band_key")), lit(buckets))))
       .collect().head.getLong(0)
     val (filesCompact, rowsAfter) = frag()
@@ -214,13 +226,15 @@ class LshIndexSpec extends SparkSpec {
       s"compact must leave one file per non-empty bucket: files=$filesCompact nonEmpty=$nonEmpty")
     assert(rowsAfter == rowsBefore, "compact must not lose or invent rows")
     // …and the index answers identically through the rewrite
-    assert(pairs(LshIndex.query(probe, "lshspec_compact")) == before)
-    assert(LshIndex.bucketStatsOf(
-      spark.table(LshIndex.bandsTable("lshspec_compact"))).collect().toSet == statsBefore)
+    assert(pairs(LshIndex.queryGen(probe, name)) == before)
+    // the compacted cold generation holds exactly the from-scratch bands
+    assert(LshIndex.bucketStatsOf(spark.table(LshIndex.bandsTable(name)))
+      .collect().toSet ==
+      LshIndex.bucketStatsOf(Dedup.lshBands(Dedup.shingleSets(d))).collect().toSet)
     // same story for the sets half
     val setsFiles = graft.sources.Bucketed.fileStats(
-      spark, LshIndex.setsTable("lshspec_compact"))._1
-    val setsNonEmpty = spark.table(LshIndex.setsTable("lshspec_compact"))
+      spark, LshIndex.setsTable(name))._1
+    val setsNonEmpty = spark.table(LshIndex.setsTable(name))
       .select(countDistinct(pmod(hash(col("doc_id")), lit(buckets))))
       .collect().head.getLong(0)
     assert(setsFiles == setsNonEmpty)
@@ -228,10 +242,10 @@ class LshIndexSpec extends SparkSpec {
 
   test("query fallback: above maxBroadcastDocs the hints drop, answers identical, plan shuffles") {
     val d = base
-    LshIndex.build(d, "lshspec_fb")
+    LshIndex.buildGen(d, "lshspec_fb")
     val probe = nearDupBatch(d)
-    val viaBroadcast = LshIndex.query(probe, "lshspec_fb")
-    val viaShuffle = LshIndex.query(probe, "lshspec_fb",
+    val viaBroadcast = LshIndex.queryGen(probe, "lshspec_fb")
+    val viaShuffle = LshIndex.queryGen(probe, "lshspec_fb",
       minJaccardPm = 800, maxBroadcastDocs = 0L)
     assert(pairs(viaShuffle) == pairs(viaBroadcast) && pairs(viaShuffle).nonEmpty,
       "both probe paths must answer identically")
@@ -247,7 +261,7 @@ class LshIndexSpec extends SparkSpec {
     val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val nodes = joinsOf(LshIndex.query(probe, "lshspec_fb",
+      val nodes = joinsOf(LshIndex.queryGen(probe, "lshspec_fb",
         minJaccardPm = 800, maxBroadcastDocs = 0L))
       assert(!nodes.exists(
         _.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]),
@@ -261,28 +275,26 @@ class LshIndexSpec extends SparkSpec {
 
   test("bucketStats over the STORED table: bucket-key aggregation plans exchange-free") {
     val d = base
-    LshIndex.build(d, "lshspec_stats")
-    val stored = LshIndex.bucketStats(spark, "lshspec_stats")
+    LshIndex.buildGen(d, "lshspec_stats")
+    val stored = LshIndex.bucketStatsGen(spark, "lshspec_stats")
     // same answer as the from-scratch derivation on the shared occupancy
-    // columns (stored additionally carries the physical-fragmentation pair)…
+    // columns (the empty hot generation contributes no rows)…
     val shared = Seq("band", "n_buckets", "max_bucket", "cand_pairs")
     val fresh = LshIndex.bucketStatsOf(Dedup.lshBands(Dedup.shingleSets(d)))
     assert(stored.select(shared.map(col): _*).collect().toSet ==
       fresh.select(shared.map(col): _*).collect().toSet)
-    // …and the fragmentation columns reconcile with the table's own files
-    val (nFiles, rows) = graft.sources.Bucketed.fileStats(
-      spark, LshIndex.bandsTable("lshspec_stats"))
-    val fragRows = stored.select("n_files", "avg_file_rows").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(fragRows == Set((nFiles, if (nFiles == 0) 0L else rows / nFiles)),
-      s"fragmentation columns must repeat table-level fileStats: $fragRows")
-    // …but the first (per-bucket) aggregation rides the table's own
-    // bucketing: the only exchange in the whole plan is the trivial
-    // 4-row per-band rollup, never the corpus-sized bucket count
+    // …the physical column reads a fresh build's one file per bucket…
+    val frag = stored.select("gen", "max_bucket_files").distinct().collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(frag == Set(("cold", 1L)), s"fresh build must be depth 1: $frag")
+    // …but the first (per-bucket) aggregation rides each table's own
+    // bucketing: the only exchanges in the whole plan are the trivial
+    // 4-row per-band rollups, one per generation (cold and the empty
+    // hot), never the corpus-sized bucket count
     val exchanges = planNodes(stored.queryExecution.executedPlan).collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
     }
-    assert(exchanges.length == 1,
-      s"expected only the per-band rollup exchange:\n${stored.queryExecution.executedPlan}")
+    assert(exchanges.length == 2,
+      s"expected only the per-band rollup exchanges:\n${stored.queryExecution.executedPlan}")
   }
 }

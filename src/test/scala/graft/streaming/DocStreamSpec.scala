@@ -276,13 +276,30 @@ class DocStreamSpec extends SparkSpec {
     assert(kept == Set(1L, 6L, 8L), s"got $kept")
   }
 
+  /** Doc ids across every live generation of an index, refreshed
+    * first: the stream's appends, rotates and commits ran in its cloned
+    * session, and this session's cached relations predate them —
+    * standard Spark table-cache semantics, same as any cross-session
+    * append. */
+  private def indexedIds(name: String): Seq[Long] = {
+    import graft.llm.LshIndex
+    Seq(LshIndex.setsTable(name), LshIndex.mergingSetsTable(name),
+        LshIndex.hotSetsTable(name))
+      .filter(spark.catalog.tableExists)
+      .flatMap { t =>
+        spark.catalog.refreshTable(t)
+        spark.table(t).select("doc_id").as[Long].collect().toSeq
+      }
+  }
+
   test("ingest: history gate drops near-dups of the stored corpus AND of earlier batches' survivors") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.llm.LshIndex
+    import graft.llm.{LshIndex, LshMaintenance}
+    import org.apache.spark.sql.functions.{col, countDistinct, hash => sqlHash, lit, pmod}
     val evalDocs = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
     val seedText =
       "the history corpus keeps many distinct tokens and each one is meaningful here " * 3
-    LshIndex.build(Seq((1L, seedText)).toDF("doc_id", "text"), "ingest_idx")
+    LshIndex.buildGen(Seq((1L, seedText)).toDF("doc_id", "text"), "ingest_idx")
     val corpusDir = Files.createTempDirectory("ingest_corpus").toString + "/corpus"
     val mem = MemoryStream[(Long, String, Timestamp)]
     val docs = mem.toDF().toDF("doc_id", "text", "event_time")
@@ -290,37 +307,55 @@ class DocStreamSpec extends SparkSpec {
       "a completely original batch payload and the words are quite useful inside " * 3
     val fresh2 =
       "another independent document is here and the vocabulary overlaps nobody else " * 3
-    val q = DocStream.ingest(docs, evalDocs, "ingest_idx", corpusDir)
+    // every batch rotates its survivors into a merge, staged only when
+    // the test releases it: the gate must see history through both
+    // halves of the merge cycle (merging generation, then the
+    // rewritten cold one)
+    val exec = new DeferredExecutor
+    val maint = new LshMaintenance(spark, "ingest_idx", exec)
+    val q = DocStream.ingestGen(docs, evalDocs, "ingest_idx", corpusDir, maint,
+        rotateEvery = 1, hotFractionPm = 0L)
       .option("checkpointLocation", Files.createTempDirectory("ckpt").toString)
       .start()
-    mem.addData(
-      (101L, "dup " + seedText, ts(10)), // near-dup of the SEED corpus
-      (102L, fresh1, ts(20)))            // survives, admitted to the index
-    q.processAllAvailable()
-    // batch 2: 201 near-dups a batch-1 SURVIVOR — not the seed corpus,
-    // and its sketch differs from 102's (extra token), so neither the
-    // seed index as-built nor the in-plan watermark gate can drop it:
-    // only the per-batch append making the index grow catches it
-    mem.addData(
-      (201L, "dup " + fresh1, ts(30)),
-      (202L, fresh2, ts(40)))            // survives
-    q.processAllAvailable()
-    q.stop()
+    try {
+      mem.addData(
+        (101L, "dup " + seedText, ts(10)), // near-dup of the SEED corpus
+        (102L, fresh1, ts(20)))            // survives, admitted to the index
+      q.processAllAvailable()
+      exec.runAll() // 102's merge staged; the next trigger commits it
+      // batch 2: 201 near-dups a batch-1 SURVIVOR — not the seed corpus,
+      // and its sketch differs from 102's (extra token), so neither the
+      // seed index as-built nor the in-plan watermark gate can drop it:
+      // only the per-batch append making the index grow catches it,
+      // here from the freshly merged cold generation
+      mem.addData(
+        (201L, "dup " + fresh1, ts(30)),
+        (202L, fresh2, ts(40)))            // survives
+      q.processAllAvailable()
+      // batch 3: near-dup of the batch-2 survivor while its merge is
+      // still in flight (the merging generation holds it)
+      mem.addData((301L, "dup " + fresh2, ts(50)))
+      q.processAllAvailable()
+    } finally {
+      q.stop(); maint.close()
+    }
     assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
     val stored = spark.read.parquet(corpusDir)
       .select("doc_id").as[Long].collect().toSet
     assert(stored == Set(102L, 202L), s"got $stored")
-    // the index admitted exactly the survivors on top of the seed.
-    // (The appends ran in the streaming query's cloned session; this
-    // session's cached relation predates them — standard Spark table
-    // cache semantics, same as any cross-session append — so refresh.
-    // That 201 was dropped above already proves batch 2's gate saw
-    // batch 1's append WITHOUT a refresh: each micro-batch re-resolves
-    // the table in its own execution.)
-    spark.catalog.refreshTable(LshIndex.setsTable("ingest_idx"))
-    val indexed = spark.table(LshIndex.setsTable("ingest_idx"))
-      .select("doc_id").as[Long].collect().toSet
-    assert(indexed == Set(1L, 102L, 202L), s"got $indexed")
+    // the index admitted exactly the survivors on top of the seed
+    val indexed = indexedIds("ingest_idx")
+    assert(indexed.sorted == Seq(1L, 102L, 202L), s"got $indexed")
+    // the committed merge left cold at one file per non-empty bucket
+    val bandsT = LshIndex.bandsTable("ingest_idx")
+    spark.catalog.refreshTable(bandsT)
+    val (nFiles, _) = graft.sources.Bucketed.fileStats(spark, bandsT)
+    val buckets = graft.sources.Bucketed.bucketCount(spark, bandsT)
+    val nonEmpty = spark.table(bandsT)
+      .select(countDistinct(pmod(sqlHash(col("band_key")), lit(buckets))))
+      .collect().head.getLong(0)
+    assert(nFiles == nonEmpty,
+      s"the merge must compact cold: $nFiles files, $nonEmpty non-empty buckets")
   }
 
   test("FULL ingest loop survives a restart: history gate + exactly-once stores across recovery") {
@@ -332,13 +367,13 @@ class DocStreamSpec extends SparkSpec {
     // this), and (c) leave corpus and index with exactly one row per
     // admitted doc (the dynamic batch_id partition overwrite +
     // self-healing gate, now exercised through the real checkpoint
-    // machinery instead of a hand-called ingestBatch replay)
+    // machinery instead of a hand-called ingestBatchGen replay)
     import org.apache.spark.sql.types._
-    import graft.llm.LshIndex
+    import graft.llm.{LshIndex, LshMaintenance}
     val evalDocs = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
     val seedText =
       "the restart corpus seed keeps many distinct tokens and each one is meaningful " * 3
-    LshIndex.build(Seq((1L, seedText)).toDF("doc_id", "text"),
+    LshIndex.buildGen(Seq((1L, seedText)).toDF("doc_id", "text"),
       "ingest_restart_idx")
     val in = Files.createTempDirectory("ingest_restart_in").toString
     val ckpt = Files.createTempDirectory("ingest_restart_ckpt").toString
@@ -352,12 +387,14 @@ class DocStreamSpec extends SparkSpec {
     val fresh2 =
       "another independent later document and the vocabulary overlaps nobody else " * 3
     def run(): Unit = {
-      val q = DocStream.ingest(
+      // each incarnation is a fresh process as far as maintenance goes
+      val maint = new LshMaintenance(spark, "ingest_restart_idx")
+      val q = DocStream.ingestGen(
         spark.readStream.schema(schema).csv(in), evalDocs,
-        "ingest_restart_idx", corpusDir)
+        "ingest_restart_idx", corpusDir, maint)
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      try q.awaitTermination(120000) finally maint.close()
       assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
     }
     Files.writeString(java.nio.file.Path.of(in, "a.csv"),
@@ -373,9 +410,7 @@ class DocStreamSpec extends SparkSpec {
       .as[Long].collect().toSeq
     assert(corpus.sorted == Seq(102L, 202L),
       s"corpus must hold each survivor exactly once, got $corpus")
-    spark.catalog.refreshTable(LshIndex.setsTable("ingest_restart_idx"))
-    val indexed = spark.table(LshIndex.setsTable("ingest_restart_idx"))
-      .select("doc_id").as[Long].collect().toSeq
+    val indexed = indexedIds("ingest_restart_idx")
     assert(indexed.sorted == Seq(1L, 102L, 202L),
       s"index must hold seed + survivors exactly once, got $indexed")
   }
@@ -437,13 +472,14 @@ class DocStreamSpec extends SparkSpec {
     assert(viaGate == distributed)
   }
 
-  test("ingestBatch replay: same (batch, batchId) twice ≡ once for corpus, index, and answers") {
-    import graft.llm.LshIndex
+  test("ingestBatchGen replay: same (batch, batchId) twice ≡ once for corpus, index, and answers") {
+    import graft.llm.{LshIndex, LshMaintenance}
     val seedText =
       "the replay seed corpus document carries plenty of distinct meaningful tokens " * 3
     val freshText =
       "an entirely new admitted document whose vocabulary stands alone in this test " * 3
-    LshIndex.build(Seq((1L, seedText)).toDF("doc_id", "text"), "replay_idx")
+    LshIndex.buildGen(Seq((1L, seedText)).toDF("doc_id", "text"), "replay_idx")
+    val maint = new LshMaintenance(spark, "replay_idx", new DeferredExecutor)
     val corpusDir = Files.createTempDirectory("replay_corpus").toString + "/corpus"
     val batch = Seq(
       (10L, freshText, ts(10)),          // survives → corpus + index
@@ -455,22 +491,25 @@ class DocStreamSpec extends SparkSpec {
       val corpus = spark.read.parquet(corpusDir)
         .select($"doc_id", $"batch_id".cast("long")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val nSets = spark.table(LshIndex.setsTable("replay_idx")).count()
-      val nBands = spark.table(LshIndex.bandsTable("replay_idx")).count()
+      def rows(tables: String*) = tables.map(t => spark.table(t).count()).sum
+      val nSets = rows(LshIndex.setsTable("replay_idx"),
+        LshIndex.hotSetsTable("replay_idx"))
+      val nBands = rows(LshIndex.bandsTable("replay_idx"),
+        LshIndex.hotBandsTable("replay_idx"))
       // a probe near-dup of the ADMITTED doc — answered from the index
       val probe = Seq((500L, "dup " + freshText)).toDF("doc_id", "text")
-      val ans = LshIndex.query(probe, "replay_idx").collect()
+      val ans = LshIndex.queryGen(probe, "replay_idx").collect()
         .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
           r.getAs[Long]("inter_size"), r.getAs[Long]("union_size"))).toSet
       (corpus, nSets, nBands, ans)
     }
 
-    DocStream.ingestBatch(batch, 0L, "replay_idx", corpusDir)
+    DocStream.ingestBatchGen(batch, 0L, "replay_idx", corpusDir, maint)
     val once = snapshot()
     assert(once._1.map(_._1) == Set(10L), s"corpus after first run: ${once._1}")
     assert(once._4.nonEmpty, "the admitted doc must be queryable from the index")
     // at-least-once replay: foreachBatch re-runs the SAME (batch, batchId)
-    DocStream.ingestBatch(batch, 0L, "replay_idx", corpusDir)
+    DocStream.ingestBatchGen(batch, 0L, "replay_idx", corpusDir, maint)
     assert(snapshot() == once,
       "replaying a committed batch must change no stored effect: " +
         s"once=$once twice=${snapshot()}")
@@ -526,9 +565,9 @@ class DocStreamSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet == Set(1L, 102L, 202L))
     assert(spark.table(LshIndex.hotSetsTable(name))
       .select("doc_id").as[Long].collect().toSet == Set(302L, 402L, 502L))
-    // and the generational layout still answers exactly like a mono
+    // and the generational layout still answers exactly like a fresh
     // index over everything admitted
-    LshIndex.build(Seq((1L, seedText), (102L, fresh(1)), (202L, fresh(2)),
+    LshIndex.buildGen(Seq((1L, seedText), (102L, fresh(1)), (202L, fresh(2)),
       (302L, fresh(3)), (402L, fresh(4)), (502L, fresh(5)))
       .toDF("doc_id", "text"), name + "_ref")
     val probe = Seq((901L, "dup " + fresh(2)), (902L, "dup " + fresh(4)),
@@ -536,7 +575,7 @@ class DocStreamSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs(LshIndex.queryGen(probe, name)) ==
-      pairs(LshIndex.query(probe, name + "_ref")))
+      pairs(LshIndex.queryGen(probe, name + "_ref")))
   }
 
   test("LshMaintenance.recover resumes an interrupted merge after a restart") {
@@ -746,55 +785,6 @@ class DocStreamSpec extends SparkSpec {
     def isShutdown: Boolean = false
     def isTerminated: Boolean = false
     def awaitTermination(timeout: Long, unit: java.util.concurrent.TimeUnit): Boolean = true
-  }
-
-  test("ingest compactEvery: in-loop GC leaves one file per non-empty bucket and the gate still sees history") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.llm.LshIndex
-    import org.apache.spark.sql.functions.{col, countDistinct, hash => sqlHash, lit, pmod}
-    val evalDocs = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
-    val seedText =
-      "the compaction loop seed document also keeps plenty of distinct meaningful tokens " * 3
-    LshIndex.build(Seq((1L, seedText)).toDF("doc_id", "text"), "compact_loop_idx")
-    val corpusDir = Files.createTempDirectory("cl_corpus").toString + "/corpus"
-    val fresh =
-      "a completely original batch payload and the words are quite useful inside " * 3
-    val fresh2 =
-      "another independent document is here and the vocabulary overlaps nobody else " * 3
-    val mem = MemoryStream[(Long, String, Timestamp)]
-    val q = DocStream.ingest(mem.toDF().toDF("doc_id", "text", "event_time"),
-        evalDocs, "compact_loop_idx", corpusDir, compactEvery = 2)
-      .option("checkpointLocation", Files.createTempDirectory("cl_ckpt").toString)
-      .start()
-    // batch 1: one survivor (batchId 0 is the empty setup batch for a
-    // MemoryStream only if no data — here addData before start means
-    // batch 0 carries rows; compactEvery=2 fires on odd batchIds)
-    mem.addData((10L, fresh, ts(10)))
-    q.processAllAvailable()
-    mem.addData((11L, fresh2, ts(20)))
-    q.processAllAvailable()
-    // batch 3 near-dups the batch-1 survivor: only the index (through
-    // any compactions) can catch it
-    mem.addData((30L, "dup " + fresh, ts(30)))
-    q.processAllAvailable()
-    q.stop()
-    assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
-    val stored = spark.read.parquet(corpusDir)
-      .select("doc_id").as[Long].collect().toSet
-    assert(stored == Set(10L, 11L), s"got $stored")
-    // at least one compaction ran: the bands table sits at exactly one
-    // file per non-empty bucket, or has accumulated at most the appends
-    // SINCE the last compact (two appends max at compactEvery=2)
-    spark.catalog.refreshTable(LshIndex.bandsTable("compact_loop_idx"))
-    val bandsT = LshIndex.bandsTable("compact_loop_idx")
-    val (nFiles, _) = graft.sources.Bucketed.fileStats(spark, bandsT)
-    val buckets = graft.sources.Bucketed.bucketCount(spark, bandsT)
-    val nonEmpty = spark.table(bandsT)
-      .select(countDistinct(pmod(sqlHash(col("band_key")), lit(buckets))))
-      .collect().head.getLong(0)
-    assert(nFiles <= nonEmpty + 2 * buckets,
-      s"compaction must bound fragmentation: $nFiles files, $nonEmpty non-empty buckets")
-    assert(nFiles < 4 * buckets, s"uncompacted growth would exceed this: $nFiles")
   }
 
   test("watermark evicts dedup state: numRowsRemoved > 0 once the horizon passes") {

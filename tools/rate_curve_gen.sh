@@ -77,7 +77,7 @@ for r in "${RATES[@]}"; do
                INGEST_JOB_TIMELINE_OUT="knee_r17/job_timeline_${r}.jsonl")
   fi
   echo "=== rate $r docs/s (generational, ${BUCKETS} buckets, ${SECONDS_PER_RATE}s) ==="
-  env INGEST_GENERATIONAL=1 INGEST_ROTATE_EVERY=3 \
+  env INGEST_ROTATE_EVERY=3 \
   INGEST_BUCKETS=$BUCKETS \
   INGEST_DOCS_PER_SEC=$r INGEST_SECONDS=$SECONDS_PER_RATE \
   INGEST_WATERMARK="40 seconds" \
