@@ -2159,15 +2159,14 @@ object OraclesLlm {
     * (count desc, lexicographic) → left-to-right non-overlapping
     * rewrite. DuckDB's `list_reduce` has no initial value, so the fold
     * runs over singleton-list elements (acc seeds with the first
-    * symbol's singleton — identical to Spark's empty-seed fold after
-    * its first step). The back-looking merge rule is equivalent to the
-    * left-to-right scan because a fresh merge `lhs·rhs` never equals
-    * `lhs`. */
-  /** The back-looking merge fold (left-to-right non-overlapping; see
-    * `graft.llm.Bpe`) over `syms`, with the pair from correlated CTE
-    * alias `b`. DuckDB's init-less `list_reduce` runs over
-    * singleton-list elements so the accumulator seeds with the first
-    * symbol — identical to Spark's empty-seed fold after one step. */
+    * symbol's singleton). The back-looking merge rule is equivalent to
+    * the engine's left-to-right scan (`Bpe.mergePair`) because a fresh
+    * merge `lhs·rhs` never equals `lhs`. */
+  /** The back-looking merge fold (left-to-right non-overlapping, like
+    * `graft.llm.Bpe.mergePair`) over `syms`, with the pair from
+    * correlated CTE alias `b`. DuckDB's init-less `list_reduce` runs
+    * over singleton-list elements so the accumulator seeds with the
+    * first symbol. */
   private def bpeFoldE: String = frag(
     """list_reduce([ [s] for s in syms ],
       |      (acc, x) -> CASE
@@ -2213,9 +2212,10 @@ object OraclesLlm {
   }
 
   val bpeMerges: String = bpeMergesSql(3)
-  // rounds = 8 lands exactly on the engine's localCheckpoint boundary
-  // (CheckpointEvery = 8), so the cross-engine gate exercises the
-  // checkpointed word table, not just the projection-chained one
+  // rounds = 8: a merged symbol merges again within the history (at
+  // sf0.01, round 6 is (m, er) on round 1's output), so the
+  // cross-engine gate checks the engine's incremental pair counts
+  // after rewrites, not just the first round's fresh count
   val bpeMerges8: String = bpeMergesSql(8)
 
   /** Apply the learned merges to the corpus: per-doc token count and

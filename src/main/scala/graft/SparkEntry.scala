@@ -780,11 +780,11 @@ object SparkEntry {
     "doc_keywords" -> ((s, dir) => TextAnalysis.docKeywords(docs(s, dir))),
     "oov_rate" -> ((s, dir) => TextAnalysis.oovRate(docs(s, dir))),
     "encode_docs" -> ((s, dir) => TextAnalysis.encodeDocs(docs(s, dir))),
-    // tokenizer TRAINING: the first 3 learned BPE merges, each round
-    // vocab-bounded after the one corpus-sized word-count aggregate
+    // tokenizer TRAINING: the first 3 learned BPE merges, every round
+    // in driver memory after the one corpus-sized word-count aggregate
     "bpe_merges" -> ((s, dir) => graft.llm.Bpe.merges(docs(s, dir))),
-    // 8 rounds = exactly one localCheckpoint boundary: the oracle
-    // replays the checkpointed training path bit-for-bit
+    // 8 rounds: the oracle replays a merge history long enough for
+    // merged symbols to merge again, bit-for-bit
     "bpe_merges_8" -> ((s, dir) => graft.llm.Bpe.merges(docs(s, dir), rounds = 8)),
     "bpe_encode_8" -> ((s, dir) => graft.llm.Bpe.encode(docs(s, dir), rounds = 8)),
     // WordPiece greedy longest-match over the same 8-round vocab —

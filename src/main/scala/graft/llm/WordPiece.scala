@@ -42,34 +42,38 @@ import org.apache.spark.sql.functions._
 object WordPiece {
 
   /** The flat piece vocabulary learned by [[Bpe]] (corpus characters
-    * ∪ merge outputs) plus the distinct TRAINING word list — the two
-    * ingredients every encode variant needs, from ONE training run.
-    * Relational end-to-end (the rules are the same ≤1-row-per-round
-    * collects Bpe already does). */
+    * ∪ merge outputs), the distinct TRAINING word list, and the
+    * vocabulary's longest piece — the three ingredients every encode
+    * variant needs, from ONE training run. The longest piece comes
+    * from the rules on the driver: character pieces are one code point
+    * each (Spark's `split(t, '')` keeps surrogate pairs whole), so it is
+    * the longest merge output in code points — what Spark's `length`
+    * counts — or 1 with no rules. */
   private[llm] def vocabAndWords(trainDocs: DataFrame,
-                                 rounds: Int): (DataFrame, DataFrame) = {
+                                 rounds: Int): (DataFrame, DataFrame, Int) = {
     val spark = trainDocs.sparkSession
     import spark.implicits._
     val (rules, wordTable) = Bpe.learn(trainDocs, rounds)
-    // characters come from the LEARNED word table (vocab-sized,
-    // already checkpointed by learn) — not from a second tokenize
-    // pass over the corpus
-    // one distinct over the union — the inner per-branch distincts the
+    // characters come from the LEARNED word table (a vocab-sized local
+    // relation) — not from a second tokenize pass over the corpus.
+    // One distinct over the union — the inner per-branch distincts the
     // r14 version ran were redundant shuffles; and wordTable is keyed
     // by token (learn's groupBy), so its token column IS distinct
     val chars = wordTable
       .select(explode(split(col("token"), "")).as("piece"))
       .filter(length(col("piece")) > 0)
-    val merged = rules.map(r => r.lhs + r.rhs).toDF("piece")
-    (chars.union(merged).distinct(), wordTable.select("token"))
+    val mergedPieces = rules.map(r => r.lhs + r.rhs)
+    val maxLen = mergedPieces.map(p => p.codePointCount(0, p.length)).foldLeft(1)(_ max _)
+    (chars.union(mergedPieces.toDF("piece")).distinct(), wordTable.select("token"), maxLen)
   }
 
   private[llm] def vocab(trainDocs: DataFrame, rounds: Int): DataFrame =
     vocabAndWords(trainDocs, rounds)._1
 
-  /** Longest piece in a vocabulary — the substring explode's length
-    * bound. One scalar collect, noise next to [[Bpe.learn]]'s
-    * per-round collects; empty vocab ⇒ 1 so `sequence` stays valid. */
+  /** Longest piece in an arbitrary vocabulary — the substring
+    * explode's length bound for the helpers that take one (the
+    * registry paths get it from [[vocabAndWords]] without a job). One
+    * scalar collect; empty vocab ⇒ 1 so `sequence` stays valid. */
   private[llm] def pieceMaxLen(pieces: DataFrame): Int =
     pieces.agg(coalesce(max(length(col("piece"))), lit(1)))
       .head().getInt(0).max(1)
@@ -133,8 +137,7 @@ object WordPiece {
     * same corpus — every character is a piece). Token-less docs drop,
     * matching [[Bpe.encode]]. */
   def encode(docs: DataFrame, rounds: Int = 8): DataFrame = {
-    val (pieces, words) = vocabAndWords(docs, rounds)
-    val maxLen = pieceMaxLen(pieces)
+    val (pieces, words, maxLen) = vocabAndWords(docs, rounds)
     // train == apply here, so the distinct word list IS the learned
     // word table — no second corpus-sized distinct. The apply side is
     // [[Bpe.encode]]'s exact shape: one exploded corpus scan,
@@ -257,8 +260,7 @@ object WordPiece {
     * [[fertilityDiff]] prices. */
   def encodeBert(trainDocs: DataFrame, applyDocs: DataFrame,
                  rounds: Int): DataFrame = {
-    val (flat, trainWords) = vocabAndWords(trainDocs, rounds)
-    val maxLen = pieceMaxLen(flat)
+    val (flat, trainWords, maxLen) = vocabAndWords(trainDocs, rounds)
     val words = applyWords(applyDocs)
     applyScan(applyDocs,
         encodeWordsBertFrom(substrings(words, maxLen), words,
@@ -295,8 +297,7 @@ object WordPiece {
     * cache's serialize/store cost exceeds the recompute). */
   def fertilityDiff(trainDocs: DataFrame, applyDocs: DataFrame,
                     rounds: Int): DataFrame = {
-    val (flat, trainWords) = vocabAndWords(trainDocs, rounds)
-    val maxLen = pieceMaxLen(flat)
+    val (flat, trainWords, maxLen) = vocabAndWords(trainDocs, rounds)
     val words = applyWords(applyDocs)
     val cands = substrings(words, maxLen)
     val enc = encodeWordsFrom(cands, words, flat)

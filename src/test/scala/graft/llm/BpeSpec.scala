@@ -52,7 +52,7 @@ class BpeSpec extends SparkSpec {
     assert(got == Map(0L -> ((3L, 3L)), 1L -> ((2L, 5L))))
   }
 
-  test("mergeFold equals a reference left-to-right scan on adversarial sequences") {
+  test("mergePair equals a reference left-to-right scan on adversarial sequences") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     // alphabet engineered so merged symbols collide with existing ones
@@ -61,29 +61,69 @@ class BpeSpec extends SparkSpec {
     val seqGen = Gen.choose(0, 8).flatMap(n => Gen.listOfN(n, sym))
     val samples = Gen.listOfN(400, seqGen)
       .apply(Gen.Parameters.default, Seed(91L)).get
-    def ref(syms: List[String], l: String, r: String): List[String] = {
-      val out = scala.collection.mutable.ListBuffer[String]()
-      var i = 0
-      while (i < syms.length) {
-        if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
-          out += (l + r); i += 2
-        } else { out += syms(i); i += 1 }
-      }
-      out.toList
+    for ((l, r) <- Seq(("a", "a"), ("a", "b"), ("aa", "a"), ("b", "aa"));
+         s <- samples) {
+      val got = Bpe.mergePair(s.toArray, l, r).toList
+      assert(got == BpeSpec.refMerge(s, l, r),
+        s"pair ($l,$r) diverged on $s: $got vs ${BpeSpec.refMerge(s, l, r)}")
     }
-    for ((l, r) <- Seq(("a", "a"), ("a", "b"), ("aa", "a"), ("b", "aa"))) {
-      val df = samples.zipWithIndex.map { case (s, i) => (i.toLong, s) }
-        .toDF("id", "syms")
-      val got = df.select($"id",
-          Bpe.mergeFold($"syms", org.apache.spark.sql.functions.lit(l),
-            org.apache.spark.sql.functions.lit(r)).as("m"))
-        .collect().map(row => row.getLong(0) -> row.getSeq[String](1).toList)
-        .toMap
-      samples.zipWithIndex.foreach { case (s, i) =>
-        assert(got(i.toLong) == ref(s, l, r),
-          s"pair ($l,$r) diverged on $s: ${got(i.toLong)} vs ${ref(s, l, r)}")
-      }
+  }
+
+  test("incremental pair counting learns the naive per-round recount's rules") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // random weighted corpora on {a, b, c}: short words over a tiny
+    // alphabet repeat pairs across words and within one word, so
+    // merges overlap, chain, and tie on count
+    val word = Gen.choose(1, 7).flatMap(n => Gen.listOfN(n, Gen.oneOf("a", "b", "c")))
+    val corpus = Gen.choose(1, 10).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(word, Gen.choose(1L, 5L))))
+    val samples = Gen.listOfN(300, Gen.zip(corpus, Gen.choose(1, 12)))
+      .apply(Gen.Parameters.default, Seed(913L)).get
+    samples.foreach { case (ws, rounds) =>
+      val words = ws.map(_._1.toArray).toArray
+      val got = Bpe.train(words, ws.map(_._2).toArray, rounds)
+        .map(m => (m.round, m.lhs, m.rhs, m.pairCnt))
+      val (want, wantWords) = BpeSpec.naiveTrain(ws, rounds)
+      assert(got == want, s"rules diverged on $ws ($rounds rounds)")
+      assert(words.map(_.toList).toList == wantWords, s"words diverged on $ws")
     }
+  }
+
+  test("best-pair ties break in Spark's UTF-8 byte order, not String.compareTo") {
+    // (ａ,b) and (😀,b) tie at 2. UTF-8 puts U+FF41 (EF BD A1) before
+    // U+1F600 (F0 9F 98 80); UTF-16 code units put the surrogate
+    // D83D before FF41, so String.compareTo would pick (😀,b)
+    val docs = Seq((0L, "ａb ａb 😀b 😀b")).toDF("doc_id", "text")
+    assert(Bpe.learn(docs, rounds = 1)._1 ==
+      Vector(Bpe.MergeRule(1, "ａ", "b", 2L)))
+  }
+
+  test("learn runs the same number of Spark jobs for 1 and 16 rounds") {
+    // the abcdefghijkl corpus supports 11 merges, so rounds=16 learns
+    // all 11 and stops; every round runs in driver memory, so the
+    // budget adds no job
+    val docs = Seq((0L, "abcdefghijkl abcdefghijkl")).toDF("doc_id", "text")
+    def jobsOf(rounds: Int): (Int, Int) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val learned = Bpe.learn(docs, rounds)._1.length
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        (learned, jobs.get)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val (one, jobsOne) = jobsOf(1)
+    val (all, jobsAll) = jobsOf(16)
+    assert(one == 1 && all == 11)
+    assert(jobsOne > 0)
+    assert(jobsAll == jobsOne, s"rounds=16 ran $jobsAll jobs, rounds=1 ran $jobsOne")
   }
 
   test("merges and encode survive a corpus whose merges exhaust before the budget") {
@@ -104,9 +144,9 @@ class BpeSpec extends SparkSpec {
   test("exhaustion past a checkpoint boundary: 11 learnable merges under a 16 budget") {
     // "abcdefghijkl" folds left one pair per round ((a,b) wins the
     // all-tied round 1 lexicographically, then (ab,c) < (c,d), ...)
-    // and collapses to one symbol after 11 merges — past the round-8
-    // localCheckpoint, before the budget. The empty round 12 must stop
-    // training without disturbing the checkpointed word table.
+    // and collapses to one symbol after 11 merges — past round 8 (once
+    // a localCheckpoint boundary), before the budget. The empty round
+    // 12 must stop training without disturbing the final word table.
     val docs = Seq((0L, "abcdefghijkl abcdefghijkl")).toDF("doc_id", "text")
     val m = Bpe.merges(docs, rounds = 16).collect()
       .map(r => (r.getLong(0), r.getString(3))).sortBy(_._1)
@@ -121,12 +161,11 @@ class BpeSpec extends SparkSpec {
   test("a rounds=64 merge budget trains in bounded time with flat-depth plans") {
     // The scale edge from round 4: rounds used to compose lazily, so
     // plan depth grew linearly with the merge budget and `merges`
-    // replayed O(rounds²) shared-lineage work. Now best pairs are
-    // harvested eagerly and the word table is re-materialized every
-    // CheckpointEvery rounds, so a 64-round budget must (a) learn 64
-    // rules on a real corpus and (b) leave a final word table whose
-    // plan is a CONSTANT-depth tree over a checkpointed leaf — no
-    // deeper than a tiny budget's.
+    // replayed O(rounds²) shared-lineage work. Now every round runs in
+    // driver memory over the collected word table, so a 64-round
+    // budget must (a) learn 64 rules on a real corpus and (b) leave a
+    // final word table whose plan is a CONSTANT-depth tree (a local
+    // relation) — no deeper than a tiny budget's.
     assume(new java.io.File("/root/testdata/sf0.01").isDirectory,
       "driver testdata not present")
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.01")
@@ -142,8 +181,7 @@ class BpeSpec extends SparkSpec {
     assert(rules.map(_.round) == (1 to 64).toVector)
     // every rule is a genuine pair over previously-built symbols
     assert(rules.forall(m => m.lhs.nonEmpty && m.rhs.nonEmpty && m.pairCnt > 0))
-    // flat depth: 64 rounds land exactly on a checkpoint boundary
-    // (64 % CheckpointEvery == 0), so the final table is a leaf —
+    // flat depth: the final table is a leaf whatever the budget —
     // no larger a plan than after 2 rounds, and bounded tight in
     // absolute terms
     assert(planNodes(w) <= planNodes(wSmall),
@@ -192,17 +230,6 @@ class BpeSpec extends SparkSpec {
     assert(got.toSeq == manual.toSeq)
   }
 
-  test("reliable checkpoint opt-in learns identical merges across a boundary") {
-    val ckptDir = java.nio.file.Files.createTempDirectory("bpe_ckpt").toString
-    spark.sparkContext.setCheckpointDir(ckptDir)
-    val docs = Seq((0L, "low low low lower lowest lowly slow glow flow"))
-      .toDF("doc_id", "text")
-    // 10 rounds crosses the CheckpointEvery=8 boundary on both paths
-    val local = Bpe.learn(docs, rounds = 10)._1
-    val reliable = Bpe.learn(docs, rounds = 10, reliableCheckpoint = true)._1
-    assert(local == reliable)
-  }
-
   test("encode drops token-less docs on both sides and counts unmergeable chars") {
     val docs = Seq((0L, "  "), (1L, "zq zq")).toDF("doc_id", "text")
     val got = Bpe.encode(docs, rounds = 1).collect()
@@ -241,5 +268,42 @@ class BpeSpec extends SparkSpec {
       sum("n_tokens"), sum("n_symbols")).collect().head
     assert(rows.map(_.getAs[Long]("n_tokens")).sum == enc.getLong(0))
     assert(rows.map(_.getAs[Long]("n_symbols")).sum == enc.getLong(1))
+  }
+}
+
+object BpeSpec {
+  /** Reference left-to-right non-overlapping merge. */
+  def refMerge(syms: List[String], l: String, r: String): List[String] = {
+    val out = scala.collection.mutable.ListBuffer[String]()
+    var i = 0
+    while (i < syms.length) {
+      if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
+        out += (l + r); i += 2
+      } else { out += syms(i); i += 1 }
+    }
+    out.toList
+  }
+
+  /** Textbook BPE: recount every pair of every word each round. The
+    * alphabet is ASCII, where String order is UTF-8 byte order. Returns
+    * (round, lhs, rhs, count) rules and the final words. */
+  def naiveTrain(corpus: List[(List[String], Long)], rounds: Int)
+      : (Vector[(Int, String, String, Long)], List[List[String]]) = {
+    var ws = corpus
+    val rules = Vector.newBuilder[(Int, String, String, Long)]
+    var round = 1
+    var done = false
+    while (round <= rounds && !done) {
+      val counts = ws.flatMap { case (s, c) => s.zip(s.drop(1)).map(_ -> c) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      if (counts.isEmpty) done = true
+      else {
+        val ((l, r), n) = counts.toSeq.minBy { case ((l, r), n) => (-n, l, r) }
+        rules += ((round, l, r, n))
+        ws = ws.map { case (s, c) => (refMerge(s, l, r), c) }
+        round += 1
+      }
+    }
+    (rules.result(), ws.map(_._1))
   }
 }
