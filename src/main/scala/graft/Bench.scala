@@ -28,34 +28,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
-    // Stream-only mode: re-measure just the streaming leg (minutes, not
-    // the full query sweep) — the knob for chasing a clean host window
-    // for the stream figure without re-running 238 queries. Prints a
-    // distinct metric line and never touches BENCH_driver.json.
-    if (sys.env.contains("BENCH_STREAM_ONLY")) {
-      val (tput, median, rates) = streamThroughput(spark, cpus.toInt)
-      val ratesJson = rates.map(r => (math.round(r * 10) / 10.0).toString)
-        .mkString("[", ",", "]")
-      println(s"""{"metric":"stream_only","stream_rows_per_sec":$tput,""" +
-        s""""stream_rows_per_sec_median":$median,""" +
-        s""""stream_batch_rates":$ratesJson,"stream_batches":${rates.length}}""")
-      spark.stop()
-      return
-    }
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
     // Subset mode (SPARK_GRAFT_ONLY="a,b,c"): time just the named
-    // queries — the iterate-on-one-operator knob. Skips the stream leg
-    // and never writes BENCH_driver.json, so a partial run can't
-    // masquerade as a round artifact.
+    // queries — the per-query dev loop. Reps stay interleaved and the
+    // full line's `runs` keeps every rep. Skips the stream leg and
+    // never writes BENCH_driver.json, so a partial run can't
+    // masquerade as a round artifact. The warmup below covers only the
+    // selected queries, so the JIT is colder in a small subset: compare
+    // timings only between runs over the same query set.
     val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // a typo'd name must fail loudly, not run a partial sweep that
@@ -84,7 +65,7 @@ object Bench {
     // machine-independent work unit. Comparing this probe across two
     // artifacts separates "the host is slower at sustained compute"
     // from "the query regressed".
-    val (probeSingle, probePar) = hostProbe(cpus.toInt)
+    val (probeSingle, probePar) = hostProbe(cpus)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Reps are INTERLEAVED round-robin (all queries once, then again),
     // not back-to-back: the dominant noise source is multi-second
@@ -159,7 +140,7 @@ object Bench {
     })
     val (streamTput, streamMedian, streamRates) =
       if (only.isDefined) (0.0, 0.0, Seq.empty[Double])
-      else streamThroughput(spark, cpus.toInt)
+      else streamThroughput(spark, cpus)
     // the per-batch series makes the figure self-diagnosing: a host
     // throttle window shows up as a slow prefix/suffix around normal
     // batches, where a bare median under a capped drain once read as a
@@ -171,8 +152,8 @@ object Bench {
       case (k, reps) =>
         k -> reps.map(r => f"${r._2}%.3f").mkString("[", ",", "]")
     })
-    val probeJson = f"""{"single_sec":$probeSingle%.3f,"parallel_sec":$probePar%.3f,"threads":${cpus.toInt}}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpus":${cpus.toInt},"queries":$qs,"mins":$minsJson,"errors":$errs,"budget_violations":$budgetJson,"host_probe":$probeJson,"stream_rows_per_sec":$streamTput,"stream_rows_per_sec_median":$streamMedian,"stream_batch_rates":$ratesJson,"stream_batches":${streamRates.length},"runs":$runsJson,"sf":"$sfDir"}"""
+    val probeJson = f"""{"single_sec":$probeSingle%.3f,"parallel_sec":$probePar%.3f,"threads":$cpus}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"mins":$minsJson,"errors":$errs,"budget_violations":$budgetJson,"host_probe":$probeJson,"stream_rows_per_sec":$streamTput,"stream_rows_per_sec_median":$streamMedian,"stream_batch_rates":$ratesJson,"stream_batches":${streamRates.length},"runs":$runsJson,"sf":"$sfDir"}"""
     println(line)
     // Also persist the line to a file: the driver captures stdout through
     // a bounded tail buffer, and round 4's committed artifact came back
@@ -188,7 +169,7 @@ object Bench {
       val out = java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_ARTIFACTS", "artifacts"))
       java.nio.file.Files.createDirectories(out)
-      Seq("BENCH_driver.json", s"BENCH_driver_c${cpus.toInt}.json")
+      Seq("BENCH_driver.json", s"BENCH_driver_c$cpus.json")
         .foreach { f =>
           val file = out.resolve(f)
           java.nio.file.Files.write(file,
@@ -198,7 +179,7 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] artifact file write failed: $e")
     }
-    println(tailLine(results, errors, budgetViolations.size, cpus.toInt,
+    println(tailLine(results, errors, budgetViolations.size, cpus,
       (probeSingle, probePar), (streamTput, streamMedian, streamRates.length),
       sfDir))
     spark.stop()

@@ -2,7 +2,7 @@ package graft
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -23,7 +23,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * ~10% exact duplicates exercising the digest state — and every
   * 17th doc is a two-token junk row the quality gate must drop.
   *
-  * Env: SPARK_GRAFT_CPUS (32), CURATE_DOCS_PER_SEC (60000),
+  * Env: SPARK_GRAFT_CPUS (4), CURATE_DOCS_PER_SEC (60000),
   * CURATE_SECONDS (120), CURATE_OUT (artifacts/CURATE_SOAK.jsonl). */
 object CurateSoak {
 
@@ -60,18 +60,12 @@ object CurateSoak {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Session.cpus
     val rate = sys.env.getOrElse("CURATE_DOCS_PER_SEC", "60000").toInt
     val seconds = sys.env.getOrElse("CURATE_SECONDS", "120").toInt
     val outPath = sys.env.getOrElse("CURATE_OUT", "artifacts/CURATE_SOAK.jsonl")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
     import spark.implicits._
 
     Option(new File(outPath).getAbsoluteFile.getParentFile).foreach(_.mkdirs())

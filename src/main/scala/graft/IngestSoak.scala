@@ -2,7 +2,6 @@ package graft
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -23,7 +22,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * ~1/17 junk (quality), ~1/20 seed near-dups (history gate), ~10%
   * exact dups (digest state), the rest kept and admitted.
   *
-  * Env: SPARK_GRAFT_CPUS (32), INGEST_DOCS_PER_SEC (20000),
+  * Env: SPARK_GRAFT_CPUS (4), INGEST_DOCS_PER_SEC (20000),
   * INGEST_SECONDS (120), INGEST_SEEDS (10000),
   * INGEST_WATERMARK ("10 minutes"),
   * INGEST_OUT (artifacts/INGEST_SOAK.jsonl).
@@ -60,7 +59,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 object IngestSoak {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Session.cpus
     val rate = sys.env.getOrElse("INGEST_DOCS_PER_SEC", "20000").toInt
     val seconds = sys.env.getOrElse("INGEST_SECONDS", "120").toInt
     val nSeeds = sys.env.getOrElse("INGEST_SEEDS", "10000").toInt
@@ -104,12 +103,6 @@ object IngestSoak {
       d
     }
     val wh = tempDir("ingest_soak_wh")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
     // FAIR scheduling with a low-weight maintenance pool, so the
     // background O(corpus) merge yields task slots to trigger jobs
     // instead of occupying all of them for its duration (under FIFO
@@ -130,11 +123,10 @@ object IngestSoak {
         |  </pool>
         |</allocations>
         |""".stripMargin)
-    val spark = builder
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.scheduler.allocation.file", pools.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus,
+      "spark.sql.warehouse.dir" -> wh,
+      "spark.scheduler.mode" -> "FAIR",
+      "spark.scheduler.allocation.file" -> pools.toString)
     import spark.implicits._
 
     Option(new File(outPath).getAbsoluteFile.getParentFile).foreach(_.mkdirs())

@@ -2,7 +2,6 @@ package graft
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
@@ -28,25 +27,19 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
   *     bounded (hash, value) sample buffer while event ids and the
   *     value distribution drift without bound.
   *
-  * Env: SPARK_GRAFT_CPUS (32), SKETCH_SOAK_ROWS_PER_SEC (100000),
+  * Env: SPARK_GRAFT_CPUS (4), SKETCH_SOAK_ROWS_PER_SEC (100000),
   * SKETCH_SOAK_SECONDS (60 per phase), SKETCH_SOAK_OUT
   * (artifacts/SKETCH_SOAK.jsonl; summary lands beside it as
   * SKETCH_SOAK_SUMMARY.json).
   */
 object SketchSoak {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Session.cpus
     val rate = sys.env.getOrElse("SKETCH_SOAK_ROWS_PER_SEC", "100000").toInt
     val seconds = sys.env.getOrElse("SKETCH_SOAK_SECONDS", "60").toInt
     val outPath = sys.env.getOrElse("SKETCH_SOAK_OUT", "artifacts/SKETCH_SOAK.jsonl")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
 
     Option(new File(outPath).getAbsoluteFile.getParentFile).foreach(_.mkdirs())
     val log = new PrintWriter(new File(outPath))

@@ -2,7 +2,6 @@ package graft
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Streaming soak: run the full trend pipeline (synthetic firehose →
@@ -13,7 +12,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * batches).
   *
   * Env:
-  *   SPARK_GRAFT_CPUS       cores (default 32)
+  *   SPARK_GRAFT_CPUS       cores (default 4, [[Session.cpus]])
   *   SOAK_ROWS_PER_SEC      feed rate (default 30000/core; the committed
   *                          artifact fed 950k rows/s at 32 cores)
   *   SOAK_SECONDS           duration (default 300)
@@ -33,18 +32,12 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   */
 object Soak {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Session.cpus
     val rate = sys.env.getOrElse("SOAK_ROWS_PER_SEC", (30000 * cpus).toString).toInt
     val seconds = sys.env.getOrElse("SOAK_SECONDS", "300").toInt
     val outPath = sys.env.getOrElse("SOAK_OUT", "artifacts/SOAK.jsonl")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
 
     Option(new File(outPath).getAbsoluteFile.getParentFile).foreach(_.mkdirs())
     val log = new PrintWriter(new File(outPath))

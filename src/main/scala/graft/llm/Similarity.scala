@@ -127,24 +127,6 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         round(col("cos"), 6).as("score"), col("rank"))
 
-  /** The typed-[[TopKAgg]] form of [[topKByQuery]] — kept as the
-    * benchmark baseline the custom operator is measured against
-    * ([[graft.TopKBench]]) and the semantics twin TopKPerKeySpec pins
-    * row-for-row. Not used by any registered query. */
-  private[graft] def topKByQueryAgg(scored: DataFrame, k: Int): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits._
-    scored.as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(t => Hit(t._3, t._2))
-      .agg(new TopKAgg(k).toColumn.name("hits"))
-      .toDF("query_id", "hits")
-      .select(col("query_id"), posexplode(col("hits")))
-      .select(col("query_id"), col("col.vecId").as("vec_id"),
-        round(col("col.cos"), 6).as("score"),
-        (col("pos") + 1L).cast("long").as("rank"))
-  }
-
   /** One labeled candidate for [[HardNegAgg]]. */
   final case class LHit(isPos: Boolean, cos: Double, vecId: Long)
 

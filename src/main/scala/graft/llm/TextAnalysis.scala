@@ -766,26 +766,6 @@ object TextAnalysis {
       docProfile(docs).select(col("pred_lang"), col("doc_id"), col("quality")),
       Seq("pred_lang"), "quality", "doc_id", k)
 
-  /** The typed-aggregator form of [[topQualityPerLang]] — the
-    * benchmark baseline for [[graft.TopKBench]]'s parity row; not used
-    * by any registered query. */
-  private[graft] def topQualityPerLangAgg(docs: DataFrame, k: Int = 5): DataFrame = {
-    import Similarity.{Hit, TopKAgg}
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docProfile(docs)
-      .select(col("pred_lang"), col("doc_id"), col("quality"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .mapValues(t => Hit(t._3.toDouble, t._2))
-      .agg(new TopKAgg(k).toColumn.name("hits"))
-      .toDF("pred_lang", "hits")
-      .select(col("pred_lang"), posexplode(col("hits")))
-      .select(col("pred_lang"), col("col.vecId").as("doc_id"),
-        col("col.cos").cast("long").as("quality"),
-        (col("pos") + 1L).cast("long").as("rank"))
-  }
-
   /** Feature-hashing vectorizer (the "hashing trick"): each doc becomes
     * a dense `dim`-long integer count vector — slot d counts the
     * tokens whose polynomial hash lands in bucket d. No vocabulary to

@@ -67,9 +67,6 @@ object WordPiece {
     (chars.union(mergedPieces.toDF("piece")).distinct(), wordTable.select("token"), maxLen)
   }
 
-  private[llm] def vocab(trainDocs: DataFrame, rounds: Int): DataFrame =
-    vocabAndWords(trainDocs, rounds)._1
-
   /** Longest piece in an arbitrary vocabulary — the substring
     * explode's length bound for the helpers that take one (the
     * registry paths get it from [[vocabAndWords]] without a job). One

@@ -239,7 +239,7 @@ class PlanAuditSpec extends SparkSpec {
       case _ => false
     }
     // Domain-bounded exemptions, each with its exact BNL count PINNED
-    // (profiled with graft.JoinProfile — identical at sf0.001/0.01/0.1),
+    // (profiled at sf0.001/0.01/0.1 — identical at each),
     // so an EXTRA nested loop sneaking into an exempted query still
     // fails. The bounds the structural check can't see:
     //  - probe: Filter(vec_id/doc_id < nQueries literal) on the unique
@@ -302,6 +302,8 @@ class PlanAuditSpec extends SparkSpec {
 
   test("join-strategy pin: shuffle joins are exactly the declared set, at every sf") {
     assume(available, "driver testdata not present")
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec,
+      ShuffledHashJoinExec, SortMergeJoinExec}
     // The regression this catches: a broadcast side silently outgrowing
     // the threshold (or a hint lost in a refactor) flips a join to
     // sort-merge/shuffled-hash — previously only a PLANS.md diff a
@@ -351,8 +353,16 @@ class PlanAuditSpec extends SparkSpec {
         .filterNot(n => eagerLifecycle(n) && dir != sfDirs.head)
         .foreach { name =>
         graft.functions.GraftExtensions.register(spark)
-        val prof = JoinProfile.profile(
-          SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
+        // count of each physical join strategy in the (pre-AQE)
+        // executed plan
+        val prof = planNodes(
+          SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan).collect {
+          case _: BroadcastHashJoinExec => "broadcast_hash"
+          case _: SortMergeJoinExec => "sort_merge"
+          case _: ShuffledHashJoinExec => "shuffled_hash"
+          case _: BroadcastNestedLoopJoinExec => "broadcast_nested_loop"
+          case _: CartesianProductExec => "cartesian"
+        }.groupBy(identity).map { case (k, v) => (k, v.size) }
         val smj = prof.getOrElse("sort_merge", 0)
         val shj = prof.getOrElse("shuffled_hash", 0)
         if (shj != 0)

@@ -4,18 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One SparkSession for the whole forked test JVM (suites run
-  * sequentially; session startup is ~5 s and must not be per-suite). */
+  * sequentially; session startup is ~5 s and must not be per-suite).
+  * Built on the mains' config ([[Session.builder]]) with a throwaway
+  * warehouse. The extensions are NOT registered here: specs register
+  * them where they need them, because RangeJoinRuleSpec adds and
+  * removes a rule on this shared session. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Session.builder(4)
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

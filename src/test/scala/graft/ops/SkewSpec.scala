@@ -93,21 +93,26 @@ class SkewSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val salted = Relational.saltedJoin(left, right, "k", col("row_id"), 8)
       val plain = left.join(right, "k")
-      assert(salted.collect().map(_.toSeq).toSet == plain.collect().map(_.toSeq).toSet)
-      // the join really runs on (k, __salt) — a regression to a plain
-      // key join would still pass the equality check above, so assert
-      // the salt is part of the executed join's keys (any strategy:
-      // AQE's own adaptive broadcast threshold may demote the disabled
-      // static one, and the key set is the invariant, not the strategy)
-      val joinKeys = planNodes(salted.queryExecution.executedPlan).collect {
-        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j.leftKeys
-        case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j.leftKeys
-        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j.leftKeys
-      }.flatten
-      assert(joinKeys.exists(_.toString.contains("__salt")),
-        s"__salt missing from join keys: $joinKeys")
+      // the selective salter too: only key 7 (90k rows) passes the
+      // threshold, so it salts while the cold keys join on salt 0
+      Seq(Relational.saltedJoin(left, right, "k", col("row_id"), 8),
+        Relational.selectiveSaltedJoin(left, right, "k", col("row_id"), 8,
+          hotThreshold = 10000L)).foreach { salted =>
+        assert(salted.collect().map(_.toSeq).toSet == plain.collect().map(_.toSeq).toSet)
+        // the join really runs on (k, __salt) — a regression to a plain
+        // key join would still pass the equality check above, so assert
+        // the salt is part of the executed join's keys (any strategy:
+        // AQE's own adaptive broadcast threshold may demote the disabled
+        // static one, and the key set is the invariant, not the strategy)
+        val joinKeys = planNodes(salted.queryExecution.executedPlan).collect {
+          case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j.leftKeys
+          case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j.leftKeys
+          case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j.leftKeys
+        }.flatten
+        assert(joinKeys.exists(_.toString.contains("__salt")),
+          s"__salt missing from join keys: $joinKeys")
+      }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 }

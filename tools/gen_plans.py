@@ -2,25 +2,20 @@
 """Regenerate PLANS.md from graft.Explain output.
 
 Usage: python3 tools/gen_plans.py [sfDir]
-Runs graft.Explain (plain java, same classpath recipe as run_verify.sh),
+Runs graft.Explain over the compiled classes through tools/run_main.sh,
 parses each query's explain("formatted") block, and rewrites PLANS.md.
 """
+import os
 import re
 import subprocess
 import sys
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-ADD_OPENS = []
-for p in ("java.lang java.lang.invoke java.lang.reflect java.io java.net "
-          "java.nio java.util java.util.concurrent java.util.concurrent.atomic").split():
-    ADD_OPENS += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
-for p in "sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar".split():
-    ADD_OPENS += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
 
 out = subprocess.run(
-    ["java", *ADD_OPENS, "-Xmx8g",
-     "-cp", "target/scala-2.13/classes:/opt/spark/jars/*",
+    ["bash", os.path.join(os.path.dirname(os.path.abspath(__file__)), "run_main.sh"),
      "graft.Explain", SF_DIR],
+    env={**os.environ, "JVM_XMX": "8g"},
     capture_output=True, text=True, check=True).stdout
 
 JOIN_KINDS = [

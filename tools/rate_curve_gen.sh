@@ -27,7 +27,7 @@
 #
 # Usage: bash tools/rate_curve_gen.sh [rates...] (default: 15000 20000 25000)
 set -euo pipefail
-cd /root/repo
+cd "$(dirname "$0")/.."
 RATES=("${@:-15000 20000 25000}")
 [ $# -eq 0 ] && RATES=(15000 20000 25000)
 BUCKETS="${INGEST_BUCKETS:-32}"
@@ -37,15 +37,6 @@ if [ "$FREE_GB" -lt 25 ]; then
   echo "refusing: only ${FREE_GB}G free on /tmp (each 600s leg churns 5-8GB; r16 ENOSPC postmortem)" >&2
   exit 1
 fi
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 OUT=artifacts/INGEST_RATE_CURVE.json
 TMP=$(mktemp -d)
 mkdir -p knee_r17
@@ -77,7 +68,8 @@ for r in "${RATES[@]}"; do
                INGEST_JOB_TIMELINE_OUT="knee_r17/job_timeline_${r}.jsonl")
   fi
   echo "=== rate $r docs/s (generational, ${BUCKETS} buckets, ${SECONDS_PER_RATE}s) ==="
-  env INGEST_ROTATE_EVERY=3 \
+  # the protocol is rated at 32 cores (Session.cpus defaults to 4)
+  env SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" INGEST_ROTATE_EVERY=3 \
   INGEST_BUCKETS=$BUCKETS \
   INGEST_DOCS_PER_SEC=$r INGEST_SECONDS=$SECONDS_PER_RATE \
   INGEST_WATERMARK="40 seconds" \
@@ -85,7 +77,7 @@ for r in "${RATES[@]}"; do
   INGEST_SEEDS=10000 INGEST_OUT="$TMP/soakG_$r.jsonl" \
   INGEST_SUMMARY_OUT="$TMP/summary_$r.json" \
   "${EXTRA_ENV[@]}" \
-  java $ADD_OPENS -Xmx24g -cp "$CP" graft.IngestSoak 2>/dev/null | tail -1
+  JVM_XMX=24g bash tools/run_main.sh graft.IngestSoak 2>/dev/null | tail -1
   cp "$TMP/soakG_$r.jsonl" "knee_r17/soakGen_${r}_b${BUCKETS}_${SECONDS_PER_RATE}s.jsonl" 2>/dev/null || true
   cp "$TMP/summary_$r.json" "knee_r17/soakGen_${r}_b${BUCKETS}_${SECONDS_PER_RATE}s_summary.json" 2>/dev/null || true
 done

@@ -3,7 +3,7 @@
 # Usage: bash tools/run_main.sh <MainClass> [args...]
 #   env: JVM_XMX (default 24g), plus whatever the main reads.
 set -euo pipefail
-cd /root/repo
+cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \

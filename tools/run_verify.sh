@@ -5,22 +5,11 @@
 set -euo pipefail
 SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT_DIR="${2:-/tmp/verify_out}"
-cd /root/repo
+cd "$(dirname "$0")/.."
 # copyResources too: plain-java runs need META-INF/services on the
 # classpath (the graft-wire DataSourceRegister), which `compile` alone
 # does not place into target/classes — without it wire_scan alone fails
 # with DATA_SOURCE_NOT_FOUND while everything else passes.
 sbt -batch "Compile/copyResources" compile > /tmp/sbt_compile.log 2>&1 || { tail -40 /tmp/sbt_compile.log; exit 1; }
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 rm -rf "$OUT_DIR"
-java $ADD_OPENS -Xmx8g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" graft.Verify "$SF_DIR" "$OUT_DIR" "${@:3}"
+JVM_XMX=8g bash tools/run_main.sh graft.Verify "$SF_DIR" "$OUT_DIR" "${@:3}"
