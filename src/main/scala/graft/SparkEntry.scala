@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Country, Sentiment}
+import graft.functions.FixedPoint.units
 import graft.llm.{AnnIndex, Classifier, Dedup, EditDistance, LangModel, LshIndex, Multimodal, Packing, Pipeline, Retrieval, SetSimJoin, Similarity, TextAnalysis}
 import graft.model.WireCodec
 import graft.ops.{Ranges, Relational, Skyline, TrendPipeline, Windows}
@@ -139,7 +140,7 @@ object SparkEntry {
       s.read.format("graft-wire").load(tmp)
         .groupBy("country")
         .agg(count(lit(1)).as("n_rows"),
-          sum(round(col("sentiment_score") * 10).cast("long")).as("score_dm"))
+          sum(units(col("sentiment_score"), 1)).as("score_dm"))
     }),
     "wire_roundtrip" -> ((s, dir) => {
       val rows = TrendPipeline.trendRows(docs(s, dir))
@@ -622,9 +623,9 @@ object SparkEntry {
       import s2.implicits._
       grid.toDF("n_bands", "rows_per_band", "jaccard_pm")
         .select(col("n_bands"), col("rows_per_band"), col("jaccard_pm"),
-          round(lit(1000.0) * (lit(1.0) -
+          units(lit(1.0) -
             pow(lit(1.0) - pow(col("jaccard_pm") / 1000.0, col("rows_per_band")),
-              col("n_bands"))), 0).cast("long").as("detect_pm"))
+              col("n_bands")), 3).as("detect_pm"))
     }),
     "ngram_jaccard_pairs" -> ((s, dir) =>
       Dedup.ngramJaccardPairs(Dedup.withNearDups(docs(s, dir)))),

@@ -143,15 +143,14 @@ object Kmv {
   /** Distinct-count estimate: exact below k, else (k-1)/U(k). */
   def estimate(sk: Column, k: Int): Column =
     when(size(sk) < k, size(sk).cast("long"))
-      .otherwise(round(lit((k - 1).toDouble) / frac(element_at(sk, k)))
-        .cast("long"))
+      .otherwise(FixedPoint.units(lit((k - 1).toDouble) / frac(element_at(sk, k)), 0))
 
   /** |A ∩ B| estimate: common retained hashes below the combined θ,
     * scaled back up. Exact when both sides are exact. */
   def intersectEstimate(a: Column, b: Column, k: Int): Column = {
     val p = least(theta(a, k), theta(b, k))
     val w = size(filter(array_intersect(a, b), x => x < p))
-    round(w.cast("double") / frac(p)).cast("long")
+    FixedPoint.units(w.cast("double") / frac(p), 0)
   }
 
   /** KMV union as a plain Column: the k smallest distinct of the

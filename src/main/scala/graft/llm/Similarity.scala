@@ -962,8 +962,8 @@ object Similarity {
       .withColumn("cnrm", sqrt(norm2Q(col("cv")).cast("double")))
     tagged.join(broadcast(cents), "source")
       .select(col("source"),
-        round(dotQ(col("qv"), col("cv")).cast("double") /
-          (col("nrm") * col("cnrm")) * 1e6).cast("long").as("cos_micro"))
+        graft.functions.FixedPoint.units(dotQ(col("qv"), col("cv")).cast("double") /
+          (col("nrm") * col("cnrm")), 6).as("cos_micro"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_vecs"),
         expr("sum(cos_micro) div count(1)").as("mean_cos_micro"),

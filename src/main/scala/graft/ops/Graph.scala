@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.functions.FixedPoint.units
+
 /** Iterative graph analytics over edge DataFrames — the one
   * computational pattern (fixed-point iteration over a distributed
   * relation) the registry did not yet exercise. Everything stays in
@@ -268,7 +270,7 @@ object Graph {
     // bidirectional by construction ⇒ no node dangles (see pageRank)
     pageRank(edges, iterations, assumeNoDangling = true)
       .select(col("node"),
-        round(col("rank") * 1e9d).cast("long").as("rank_e9"))
+        units(col("rank"), 9).as("rank_e9"))
   }
 
   /** PERSONALIZED PageRank (Page et al. 1999 §6 "personalized" E
@@ -397,6 +399,6 @@ object Graph {
     // bidirectional by construction ⇒ no node dangles (see pageRank)
     personalizedPageRank(edges, seeds, iterations, assumeNoDangling = true)
       .select(col("node"),
-        round(col("rank") * 1e9d).cast("long").as("rank_e9"))
+        units(col("rank"), 9).as("rank_e9"))
   }
 }

@@ -59,7 +59,11 @@ object SqlSurface {
       |     ELSE 'not_understood' END""".stripMargin
 
   /** Exact integer cents/base-points sum — the SQL spelling of
-    * [[Relational.sumCents]]. */
+    * [[Relational.sumCents]]. It keeps the built-in `round`: this
+    * surface is plain SQL text that any Spark session parses, and
+    * [[graft.functions.RoundHalfUpLong]] is not a registered SQL
+    * function. The two round to the same longs, so SqlSurfaceSpec's
+    * equality pins hold. */
   private def cents(x: String, scale: Int = 2): String =
     s"sum(CAST(round(($x) * ${math.pow(10, scale).toLong}) AS BIGINT))"
 

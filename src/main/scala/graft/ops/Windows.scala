@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.FixedPoint.units
+
 /** Event-time window aggregations — the batch analogs of A-1's
   * `reduceByKeyAndWindow(_ + _, Seconds(60))` with a 15 s slide
   * (`KafkaSparkProcessor.scala:131-140`; SURVEY.md §2.9).
@@ -448,7 +450,7 @@ object Windows {
     // shift the median rank; SQL quantile_disc ignores them — both
     // engines must share one domain).
     val v = events.select(col("event_type"),
-      expr("cast(round(value * 1000000) as long)").as("v"))
+      units(col("value"), 6).as("v"))
       .filter(col("v").isNotNull)
     val med = lowerMedian(v, "v", "median_micro")
     val dev = v.join(broadcast(med), "event_type")
@@ -781,7 +783,7 @@ object Windows {
     def partial(df: DataFrame): DataFrame = df
       .select(date_format(col("ts"), "yyyy-MM-dd").as("day"),
         col("event_type"),
-        expr("cast(round(value * 100) as long)").as("v_c"))
+        units(col("value"), 2).as("v_c"))
       .groupBy("day", "event_type")
       .agg(count(lit(1)).as("n_events"),
         sum(coalesce(col("v_c"), lit(0L))).as("value_c"))
@@ -854,7 +856,7 @@ object Windows {
       .select(col("event_type"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"),
         xxhash64(col("event_id")).as("h"),
-        expr("cast(round(value * 1000000) as long)").as("v"))
+        units(col("value"), 6).as("v"))
       .filter(col("v").isNotNull)
     def sketchBy(withDay: Boolean): DataFrame =
       rows.select(col("event_type"),

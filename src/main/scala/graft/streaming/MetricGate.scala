@@ -42,7 +42,7 @@ object MetricGate {
         Seq(lit(k), lit(m)) }: _*)
       val mad = map(profile.toSeq.sortBy(_._1).flatMap { case (k, (_, d)) =>
         Seq(lit(k), lit(d)) }: _*)
-      val v = round(value * lit(1000000)).cast("long")
+      val v = graft.functions.FixedPoint.units(value, 6)
       // NULL values pass explicitly (the comparison would be NULL and the
       // filter would silently drop them): no evidence is not evidence of
       // anomaly — same domain decision as the batch operator, which

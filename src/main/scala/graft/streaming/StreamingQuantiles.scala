@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.BottomK
+import graft.functions.FixedPoint.units
 
 /** Continuous per-type value quantiles — the streaming leg of the
   * bottom-k sample sketch ([[graft.functions.BottomK]]), completing
@@ -47,7 +48,7 @@ object StreamingQuantiles {
     import spark.implicits._
     events
       .select(col("event_type"), xxhash64(col("event_id")).as("h"),
-        expr("cast(round(value * 1000000) as long)").as("v"))
+        units(col("value"), 6).as("v"))
       .filter(col("v").isNotNull)
       .as[(String, Long, Long)]
       .groupByKey(_._1)

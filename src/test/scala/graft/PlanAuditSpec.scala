@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Round
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, CartesianProductExec}
@@ -22,6 +23,14 @@ class PlanAuditSpec extends SparkSpec {
   private def planOf(name: String): Seq[SparkPlan] = {
     graft.functions.GraftExtensions.register(spark)
     planNodes(SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan)
+  }
+
+  test("q1_agg's optimized plan rounds with RoundHalfUpLong, not Round") {
+    assume(available, "driver testdata not present")
+    val plan = SparkEntry.queries("q1_agg")(spark, sfDir).queryExecution.optimizedPlan
+    val exprs = plan.collect { case p => p.expressions }.flatten.flatMap(_.collect { case e => e })
+    assert(!exprs.exists(_.isInstanceOf[Round]), plan.toString)
+    assert(exprs.exists(_.isInstanceOf[graft.functions.RoundHalfUpLong]), plan.toString)
   }
 
   test("no registered query plans a CartesianProduct") {

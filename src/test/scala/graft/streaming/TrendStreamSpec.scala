@@ -4,9 +4,14 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
@@ -60,6 +65,38 @@ class TrendStreamSpec extends SparkSpec {
     // first batch again (restart semantics): truncate back to 1 row
     sink.write(df1, 0L)
     assert(spark.read.parquet(dir).count() == 1)
+  }
+
+  test("ParquetSink in the stream: no round-robin exchange by default, at most one file per shuffle partition") {
+    // Through the real foreachBatch path, where AQE is off, so the
+    // per-batch dedup's shuffle partitioning reaches the write.
+    val lines = Seq("Boston, MA /TLOC/ fast #a #a #b", "Paris /TLOC/ slow slow #a")
+    def run(sink: TrendSink.ParquetSink): (Int, Boolean) = {
+      val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.put(qe.executedPlan)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        processBatches(Seq(lines), sink)
+        val write = Iterator.continually(plans.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+          .map { p => assert(p != null, "no plan reported for the write"); planNodes(p) }
+          .find(_.exists(_.isInstanceOf[DataWritingCommandExec])).get
+        val roundRobin = write.exists {
+          case s: ShuffleExchangeExec => s.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+          case _ => false
+        }
+        val files = new java.io.File(sink.path).listFiles.count(_.getName.endsWith(".parquet"))
+        assert(spark.read.parquet(sink.path).count() == 3)
+        (files, roundRobin)
+      } finally spark.listenerManager.unregister(listener)
+    }
+    val base = Files.createTempDirectory("trendsink").toString
+    val (files, roundRobin) = run(TrendSink.ParquetSink(base + "/default"))
+    assert(!roundRobin)
+    assert(files >= 1 && files <= spark.conf.get("spark.sql.shuffle.partitions").toInt, files)
+    assert(run(TrendSink.ParquetSink(base + "/two", repartition = Some(2))) == ((2, true)))
   }
 
   test("observe metric exposes per-batch row count (A-3)") {
