@@ -19,14 +19,18 @@ object Session {
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
   /** `local[cpus]` with shuffle partitions = cpus, UTC session time,
-    * nanos-as-long parquet timestamps and the UI off. */
-  def builder(cpus: Int): SparkSession.Builder =
-    SparkSession.builder()
+    * nanos-as-long parquet timestamps, the UI off and the fork-free
+    * local file system ([[graft.io.LocalIo]]). */
+  def builder(cpus: Int): SparkSession.Builder = {
+    val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+    graft.io.LocalIo.hadoopConf.foreach { case (k, v) => b.config(s"spark.hadoop.$k", v) }
+    b
+  }
 
   /** [[builder]] plus the extra `conf` pairs, log level WARN and the
     * graft extensions registered. */

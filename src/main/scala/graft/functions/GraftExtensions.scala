@@ -73,8 +73,11 @@ object GraftExtensions {
   /** Imperative registration on a live session (tests, notebooks):
     * functions plus the range-join rewrite (idempotent — the rule runs
     * in the experimental batch when it can't be injected at session
-    * build time). */
+    * build time), and the fork-free local file system on the session's
+    * Hadoop configuration ([[graft.io.LocalIo]], which says what a
+    * session built outside [[graft.Session]] gets from it). */
   def register(spark: SparkSession): Unit = {
+    graft.io.LocalIo.install(spark.sparkContext.hadoopConfiguration)
     all.foreach { f =>
       spark.sessionState.functionRegistry.registerFunction(f._1, f._2, f._3)
     }

@@ -16,27 +16,25 @@ trait TrendSink {
 
 object TrendSink {
 
-  /** S-4 analog (+S-6/S-7/A-5/S-8): parquet store with first-batch
-    * truncation and optional write repartition. Mongo/MySQL become this
-    * sink with a different `DataFrameWriter` format on a real cluster —
-    * append-mode semantics are identical.
+  /** S-4 analog (+S-6/S-7/A-5): parquet store with first-batch
+    * truncation. Mongo/MySQL become this sink with a different
+    * `DataFrameWriter` format on a real cluster — append-mode semantics
+    * are identical.
     *
-    * No repartition by default: each batch is written with the
-    * partitioning its data arrives in. The reference's `repartition(10)`
-    * spread connection load over Mongo writers; here a deduped trend
-    * batch is a handful of rows, and the round-robin exchange plus ten
-    * write tasks are pure overhead: in a traced perfbench `trend_stream`
-    * pair at 4 cores, dropping them cut `sinks.write_ms` per pass from
-    * 463 to 337 ms, jobs from 6 to 4 and tasks from 30 to 10. */
+    * S-8 is not ported: each batch is written with the partitioning its
+    * data arrives in. The reference's `repartition(10)` spread connection
+    * load over Mongo writers; here a deduped trend batch is a handful of
+    * rows, and the round-robin exchange plus ten write tasks are pure
+    * overhead: in a traced perfbench `trend_stream` pair at 4 cores,
+    * dropping them cut `sinks.write_ms` per pass from 463 to 337 ms, jobs
+    * from 6 to 4 and tasks from 30 to 10. */
   final case class ParquetSink(
       path: String,
-      repartition: Option[Int] = None,
       truncateFirstBatch: Boolean = true) extends TrendSink {
     def write(df: DataFrame, batchId: Long): Unit = {
-      val out = repartition.map(df.repartition(_)).getOrElse(df)
       val mode =
         if (truncateFirstBatch && batchId == 0L) "overwrite" else "append"
-      out.write.mode(mode).parquet(path)
+      df.write.mode(mode).parquet(path)
     }
   }
 

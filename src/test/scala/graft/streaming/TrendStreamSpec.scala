@@ -17,8 +17,8 @@ import graft.SparkSpec
 
 /** Streaming assembly tests over MemoryStream (SURVEY §5.4): per-batch
   * dedup, first-batch truncation (A-5/S-6/S-7), append (S-4),
-  * repartition (S-8), observe counter (A-3), windowed counts (A-1),
-  * source trait + synthetic generator (SRC-1/P-12). */
+  * the write's partitioning (S-8 is not ported), observe counter (A-3),
+  * windowed counts (A-1), source trait + synthetic generator (SRC-1/P-12). */
 class TrendStreamSpec extends SparkSpec {
   import spark.implicits._
 
@@ -52,9 +52,9 @@ class TrendStreamSpec extends SparkSpec {
     assert(scores(("#a", "NULL")) == 0.0) // "slow slow a": 2 - 2
   }
 
-  test("ParquetSink: batch 0 truncates, later batches append, repartition honored") {
+  test("ParquetSink: batch 0 truncates, later batches append") {
     val dir = Files.createTempDirectory("trendsink").toString + "/out"
-    val sink = TrendSink.ParquetSink(dir, repartition = Some(2))
+    val sink = TrendSink.ParquetSink(dir)
     val df1 = Seq((100, "#a", 2.0, "neutral", "USA"))
       .toDF("timestamp", "hashtag", "sentiment_score", "sentiment_type", "country")
     val df2 = Seq((200, "#b", 3.0, "positive", "USA"))
@@ -67,36 +67,30 @@ class TrendStreamSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() == 1)
   }
 
-  test("ParquetSink in the stream: no round-robin exchange by default, at most one file per shuffle partition") {
+  test("ParquetSink in the stream: no round-robin exchange, at most one file per shuffle partition") {
     // Through the real foreachBatch path, where AQE is off, so the
     // per-batch dedup's shuffle partitioning reaches the write.
     val lines = Seq("Boston, MA /TLOC/ fast #a #a #b", "Paris /TLOC/ slow slow #a")
-    def run(sink: TrendSink.ParquetSink): (Int, Boolean) = {
-      val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
-      val listener = new QueryExecutionListener {
-        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.put(qe.executedPlan)
-        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      try {
-        processBatches(Seq(lines), sink)
-        val write = Iterator.continually(plans.poll(30, java.util.concurrent.TimeUnit.SECONDS))
-          .map { p => assert(p != null, "no plan reported for the write"); planNodes(p) }
-          .find(_.exists(_.isInstanceOf[DataWritingCommandExec])).get
-        val roundRobin = write.exists {
-          case s: ShuffleExchangeExec => s.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
-          case _ => false
-        }
-        val files = new java.io.File(sink.path).listFiles.count(_.getName.endsWith(".parquet"))
-        assert(spark.read.parquet(sink.path).count() == 3)
-        (files, roundRobin)
-      } finally spark.listenerManager.unregister(listener)
+    val sink = TrendSink.ParquetSink(Files.createTempDirectory("trendsink").toString + "/out")
+    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.put(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    val base = Files.createTempDirectory("trendsink").toString
-    val (files, roundRobin) = run(TrendSink.ParquetSink(base + "/default"))
-    assert(!roundRobin)
-    assert(files >= 1 && files <= spark.conf.get("spark.sql.shuffle.partitions").toInt, files)
-    assert(run(TrendSink.ParquetSink(base + "/two", repartition = Some(2))) == ((2, true)))
+    spark.listenerManager.register(listener)
+    try {
+      processBatches(Seq(lines), sink)
+      val write = Iterator.continually(plans.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .map { p => assert(p != null, "no plan reported for the write"); planNodes(p) }
+        .find(_.exists(_.isInstanceOf[DataWritingCommandExec])).get
+      assert(!write.exists {
+        case s: ShuffleExchangeExec => s.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+        case _ => false
+      })
+      val files = new java.io.File(sink.path).listFiles.count(_.getName.endsWith(".parquet"))
+      assert(files >= 1 && files <= spark.conf.get("spark.sql.shuffle.partitions").toInt, files)
+      assert(spark.read.parquet(sink.path).count() == 3)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("observe metric exposes per-batch row count (A-3)") {
@@ -115,9 +109,10 @@ class TrendStreamSpec extends SparkSpec {
     try {
       val sink = new TrendSink.MemoryProducerSink()
       val rows = TrendStream.observed(TrendStream.trendRows(mem.toDF()))
+      // data before start: AvailableNow ends at the offsets it sees first
+      mem.addData("Boston, MA /TLOC/ fast #a #b")
       val q = TrendStream.writer(rows, sink, Trigger.AvailableNow(),
         Some(Files.createTempDirectory("ckpt").toString)).start()
-      mem.addData("Boston, MA /TLOC/ fast #a #b")
       q.awaitTermination(60000)
       // explode produced 2 rows pre-dedup
       var waited = 0
@@ -203,10 +198,6 @@ class TrendStreamSpec extends SparkSpec {
     val joined = TrendStream.intervalJoin(rows(lMem, 0), rows(rMem, 0),
       intervalSec = 60)
     val out = new TrendSink.MemoryProducerSink()
-    val q = joined.writeStream.trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString)
-      .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) => out.write(df, id))
-      .start()
     lMem.addData("1000,#a,3.0", "1000,#b,2.0")
     rMem.addData(
       "990,#a,1.0",   // within 60s before -> match
@@ -214,6 +205,10 @@ class TrendStreamSpec extends SparkSpec {
       "930,#a,0.5",   // 70s before -> outside interval
       "1010,#a,4.0",  // after left -> no match
       "995,#c,1.5")   // wrong key
+    val q = joined.writeStream.trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString)
+      .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) => out.write(df, id))
+      .start()
     q.awaitTermination(60000)
     val got = out.buffer.values.flatten
       .map(r => (r.getAs[String]("hashtag"), r.getAs[Int]("r_timestamp")))
@@ -298,13 +293,13 @@ class TrendStreamSpec extends SparkSpec {
     val mem = MemoryStream[String]
     val base = TrendStream.trendRows(mem.toDF())
     val out = new TrendSink.MemoryProducerSink()
+    mem.addData("Boston, MA /TLOC/ fast #a #a") // same key twice in one batch
     val dedup = TrendStream.dedupWithinWatermark(base)
       .select("timestamp", "hashtag", "sentiment_score", "sentiment_type", "country")
     val q = dedup.writeStream.trigger(Trigger.AvailableNow())
       .option("checkpointLocation", Files.createTempDirectory("ckpt").toString)
       .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) => out.write(df, id))
       .start()
-    mem.addData("Boston, MA /TLOC/ fast #a #a") // same key twice in one batch
     q.awaitTermination(60000)
     assert(out.buffer.values.flatten.size == 1)
   }
