@@ -1,6 +1,12 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -11,8 +17,62 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * single file.
   */
 object Tables {
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+
+  /** A path's inferred schema and what it was inferred from: the
+    * session's parquet confs and a digest of the file listing. */
+  private final case class Inferred(schema: StructType,
+                                    confs: Map[String, String],
+                                    listing: String)
+
+  private val inferred = new ConcurrentHashMap[String, Inferred]()
+
+  /** Read one table, inferring its schema once per path.
+    *
+    * A schema-less `spark.read.parquet` runs a Spark job to infer the
+    * schema (`SchemaMergeUtils.mergeSchemasInParallel` reads a footer):
+    * 104-154 ms and one job per read at `local[4]`, against 13-29 ms and
+    * no job with the schema given. Every registry query starts here, so
+    * that job used to be half of the `registry_queries` jobs per pass.
+    * The first read of a path infers as before and keeps the schema;
+    * later reads pass it with `.schema(...)`.
+    *
+    * A hit is used only when the session's parquet confs (every
+    * `getAllConfs` key containing `parquet`, e.g. `binaryAsString`,
+    * `nanosAsLong`) equal those it was inferred under, and the new
+    * relation's file listing — which Spark makes on every read anyway —
+    * has the same sorted `(path, length, mtime)` digest. Otherwise the
+    * path is inferred again. So a hit returns exactly the schema
+    * inference would return for the same files. Only the schema is
+    * kept: a cached `DataFrame` or relation would keep a stale listing
+    * and stay bound to one session. */
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val confs = spark.sessionState.conf.getAllConfs.filter(_._1.contains("parquet"))
+    val hit = Option(inferred.get(path)).filter(_.confs == confs).flatMap { c =>
+      val df = spark.read.schema(c.schema).parquet(path)
+      Option.when(listing(df).contains(c.listing))(df)
+    }
+    hit.getOrElse {
+      val df = spark.read.parquet(path)
+      listing(df).foreach(l => inferred.put(path, Inferred(df.schema, confs, l)))
+      df
+    }
+  }
+
+  /** SHA-256 over the sorted `(path, length, mtime)` of the files `df`
+    * reads; `None` when it reads no listed file relation. */
+  private def listing(df: DataFrame): Option[String] = {
+    val files = fileRelations(df).flatten.flatMap(_.location match {
+      case index: PartitioningAwareFileIndex => index.allFiles()
+      case _ => Nil
+    })
+    Option.when(files.nonEmpty) {
+      val md = MessageDigest.getInstance("SHA-256")
+      files.map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}\n")
+        .sorted.foreach(line => md.update(line.getBytes(UTF_8)))
+      md.digest().map(b => f"$b%02x").mkString
+    }
+  }
 
   /** Unsplittable-input guard (optimization guide §2.5 "input skew:
     * one huge unsplittable file", §6 split sizing), applied SURGICALLY
@@ -69,22 +129,26 @@ object Tables {
     * in-memory batches, cached relations and streaming sources are
     * already distributed by their producers. */
   private def estimatedScanSlices(df: DataFrame): Option[Long] = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val maxSplit = math.max(1L,
       df.sparkSession.sessionState.conf.filesMaxPartitionBytes)
-    val perLeaf = df.queryExecution.analyzed.collectLeaves().map {
+    val perLeaf = fileRelations(df).map(_.map { fs =>
+      val files = math.max(1L, fs.location.inputFiles.length.toLong)
+      val bytes = fs.location.sizeInBytes
+      math.max(files, (bytes + maxSplit - 1) / maxSplit)
+    })
+    if (perLeaf.isEmpty || perLeaf.contains(None)) None
+    else Some(perLeaf.flatten.sum)
+  }
+
+  /** Each leaf of `df`'s plan: its file relation, or `None`. */
+  private def fileRelations(df: DataFrame): Seq[Option[HadoopFsRelation]] =
+    df.queryExecution.analyzed.collectLeaves().map {
       case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation =>
-          val files = math.max(1L, fs.location.inputFiles.length.toLong)
-          val bytes = fs.location.sizeInBytes
-          Some(math.max(files, (bytes + maxSplit - 1) / maxSplit))
+        case fs: HadoopFsRelation => Some(fs)
         case _ => None
       }
       case _ => None
     }
-    if (perLeaf.isEmpty || perLeaf.contains(None)) None
-    else Some(perLeaf.flatten.sum)
-  }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "orders")

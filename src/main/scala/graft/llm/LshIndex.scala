@@ -688,11 +688,13 @@ object LshIndex {
             val staging = live + "__staging"
             graft.sources.Bucketed.writeBucketed(
               spark.table(live).limit(0), staging, key, buckets)
+            // the catalog's schema spares each slice an inference job
+            val schema = spark.table(live).schema
             for (slice <- 0 until k) {
               val paths = (slice until buckets by k)
                 .flatMap(b => lv.getOrElse(b, Nil) ++ mg.getOrElse(b, Nil))
               if (paths.nonEmpty) {
-                val rows = spark.read.parquet(paths: _*).dropDuplicates()
+                val rows = spark.read.schema(schema).parquet(paths: _*).dropDuplicates()
                 graft.sources.Bucketed.appendBucketed(
                   rows.repartition(buckets, rows(key)), staging, key, buckets)
               }

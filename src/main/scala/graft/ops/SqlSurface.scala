@@ -33,9 +33,7 @@ object SqlSurface {
     * composes on top of the engine's parsing pipeline). */
   def registerViews(spark: SparkSession, sfDir: String): Unit = {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem").foreach { t =>
-      spark.read.parquet(s"$sfDir/$t.parquet").createOrReplaceTempView(t)
-    }
+      "lineitem").foreach(t => Tables(spark, sfDir, t).createOrReplaceTempView(t))
     Tables.documents(spark, sfDir).createOrReplaceTempView("documents")
     Tables.events(spark, sfDir).createOrReplaceTempView("events")
     TrendPipeline.trendRows(Tables.documents(spark, sfDir))

@@ -231,10 +231,11 @@ object Bucketed {
     * bucketed tables must read at least one side through this, which
     * forces a genuine exchange. Within ONE table the layout is safe —
     * all copies of a key share a bucket, hence a scan partition. */
-  def readUnbucketed(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(spark.sessionState.catalog
+  def readUnbucketed(spark: SparkSession, table: String): DataFrame = {
+    val meta = spark.sessionState.catalog
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .location.toString)
+    spark.read.schema(meta.schema).parquet(meta.location.toString)
+  }
 
   /** Equi-join of two same-key, same-bucket-count tables — planned
     * exchange-free (the point of the layout). */

@@ -1,9 +1,5 @@
 package graft
 
-import java.io.File
-
-import scala.util.matching.Regex
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the BigDecimal round-to-long idiom out of the engine: Spark
@@ -14,15 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * SQL (`Oracles*`) keep the built-in. PlanAuditSpec pins the same
   * for q1_agg's optimized plan. */
 class FixedPointGuardSpec extends AnyFunSuite {
-
-  /** Source text with comments blanked out, line breaks kept. */
-  private def code(f: File): String = {
-    val src = scala.io.Source.fromFile(f, "UTF-8")
-    try "(?s)/\\*.*?\\*/".r.replaceAllIn(src.mkString,
-        m => Regex.quoteReplacement(m.matched.replaceAll("[^\n]", " ")))
-      .replaceAll("//[^\n]*", "")
-    finally src.close()
-  }
 
   /** Index of the `)` that closes the `(` at `open`, or -1. */
   private def closing(s: String, open: Int): Int = {
@@ -64,15 +51,11 @@ class FixedPointGuardSpec extends AnyFunSuite {
   }
 
   test("no round(…).cast(\"long\") / cast(round(…) as long) outside SqlSurface and Oracles") {
-    val root = new File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
-    def files(d: File): Seq[File] = d.listFiles.toSeq.flatMap(f =>
-      if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
-    val hits = files(root)
+    val hits = MainSources.files
       .filterNot(f => f.getName == "SqlSurface.scala" || f.getName.startsWith("Oracles"))
       .flatMap { f =>
-        val s = code(f)
-        slowRounds(s).map(at => s"${f.getPath}:${s.substring(0, at).count(_ == '\n') + 1}")
+        val s = MainSources.code(f)
+        slowRounds(s).map(MainSources.where(f, s, _))
       }
     assert(hits.isEmpty, s"use graft.functions.FixedPoint.units at: ${hits.mkString(", ")}")
   }

@@ -133,4 +133,104 @@ class TablesSpec extends SparkSpec {
     assert(o("o_orderpriority") == StringType &&
       o("o_orderstatus") == StringType, s"orders columns drifted: $o")
   }
+
+  // ---- the per-path schema cache behind Tables.apply ----
+
+  private val allTables = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
+  private def tempDir(): String =
+    java.nio.file.Files.createTempDirectory("graft_tables").toString
+
+  /** Spark jobs started while `body` runs, listener bus drained on both
+    * sides. */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("a cached read returns the schema and rows of a fresh inference, for every table") {
+    haveTestdata()
+    for (t <- allTables) {
+      Tables(spark, sfDir, t)
+      val cached = Tables(spark, sfDir, t)
+      val fresh = spark.read.parquet(s"$sfDir/$t.parquet")
+      assert(cached.schema == fresh.schema, s"$t: cached schema differs")
+      assert(sortedRows(cached) == sortedRows(fresh), s"$t: cached read differs")
+    }
+    val freshEvents = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val normalized = StructType(freshEvents.fields.map(f =>
+      if (f.name == "ts") f.copy(dataType = TimestampType) else f))
+    assert(Tables.events(spark, sfDir).schema == normalized)
+  }
+
+  test("a table rewritten at the same path with other columns is read with the new schema") {
+    val s = spark; import s.implicits._
+    val dir = tempDir()
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$dir/t.parquet")
+    Tables(spark, dir, "t")
+    assert(Tables(spark, dir, "t").columns.toSeq == Seq("id", "s"))
+    Seq((2L, 3.0, "x")).toDF("id", "v", "w")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val reread = Tables(spark, dir, "t")
+    assert(reread.columns.toSeq == Seq("id", "v", "w"))
+    assert(reread.collect().toSeq == Seq(org.apache.spark.sql.Row(2L, 3.0, "x")))
+  }
+
+  test("changing a parquet conf infers the schema again") {
+    // written by parquet-mr, not Spark: Spark keeps its own schema in
+    // the footer, and inference prefers that over binaryAsString
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = tempDir()
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 id; required binary payload; }")
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/b.parquet"))
+      .withConf(spark.sparkContext.hadoopConfiguration)
+      .withType(schema).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("id", 1L).append("payload", "abc"))
+    finally writer.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    def payloadType = Tables(spark, dir, "b").schema("payload").dataType
+    assert(payloadType == BinaryType)
+    assert(payloadType == BinaryType)
+    spark.conf.set(key, "true")
+    try assert(payloadType == StringType)
+    finally spark.conf.unset(key)
+    assert(payloadType == BinaryType)
+  }
+
+  test("a first read runs one Spark job and a cached read none") {
+    val s = spark; import s.implicits._
+    val dir = tempDir()
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$dir/j.parquet")
+    assert(jobsDuring(Tables(spark, dir, "j")) == 1)
+    assert(jobsDuring(Tables(spark, dir, "j")) == 0)
+  }
+
+  test("building q1_agg, sliding_counts and media_meta runs no Spark job once their tables were read") {
+    haveTestdata()
+    val names = Seq("q1_agg", "sliding_counts", "media_meta")
+    names.foreach(n => SparkEntry.queries(n)(spark, sfDir))
+    for (n <- names)
+      assert(jobsDuring(SparkEntry.queries(n)(spark, sfDir)) == 0,
+        s"building $n ran Spark jobs")
+  }
 }
