@@ -341,7 +341,7 @@ object DocStream {
       // probed, and verified exactly once
       survivors.persist()
       try {
-        survivors.withColumn("batch_id", lit(batchId))
+        survivors.withColumn("batch_id", graft.functions.BatchConstant(lit(batchId)))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-import graft.functions.{Country, Sentiment}
+import graft.functions.{BatchConstant, Country, Sentiment}
 import graft.model.WireCodec
 import graft.text.TextOps
 
@@ -23,8 +23,18 @@ object TrendStream {
 
   /** T-1/T-2 on a streaming frame of `value` wire lines: parse, clean,
     * score once per tweet, explode hashtags. `timestamp` is the
-    * processing-time batch second — the reference stamps batch time
-    * (`KafkaSparkProcessor.scala:109`), we stamp arrival time. */
+    * micro-batch's time in epoch seconds (`batchTimestampMs / 1000` of the
+    * batch's offset log entry), as the reference stamps batch time
+    * (`KafkaSparkProcessor.scala:109`).
+    *
+    * The stamp goes through [[graft.functions.BatchConstant]]. Spark turns
+    * a streaming `current_timestamp()` into the batch time as a literal,
+    * and a literal is spliced into the generated Java source, so every
+    * micro-batch compiled this row stage anew (two Janino compiles before
+    * each batch's first job). Read from the stage's references, the value
+    * leaves the source the same in every batch and the compiled class is
+    * reused; `codegenStringSeq(lastExecution.executedPlan)` shows it, and
+    * TrendStreamSpec pins it. */
   def trendRows(lines: DataFrame): DataFrame = {
     lines
       // stage the parsed fields: the wire-line split feeds three
@@ -34,7 +44,7 @@ object TrendStream {
         WireCodec.tweetLocation(col("value")).as("loc"),
         WireCodec.tweetText(col("value")).as("text"))
       .select(
-        unix_timestamp(current_timestamp()).cast("int").as("timestamp"),
+        BatchConstant(unix_timestamp(current_timestamp()).cast("int")).as("timestamp"),
         Country.extractCountry(col("loc")).as("country"),
         TextOps.cleanTweetText(col("text")).as("clean"),
         TextOps.extractHashtags(col("text")).as("tags"))

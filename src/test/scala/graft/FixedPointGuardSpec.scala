@@ -11,30 +11,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * for q1_agg's optimized plan. */
 class FixedPointGuardSpec extends AnyFunSuite {
 
-  /** Index of the `)` that closes the `(` at `open`, or -1. */
-  private def closing(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      s(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
   /** Offsets of `round(…).cast("long")` and `cast(round(…) as long)`. */
   private def slowRounds(s: String): Seq[Int] = {
     val columnForm = "(?<![.\\w])round\\(".r.findAllMatchIn(s).map(_.start).filter { at =>
-      val end = closing(s, at + "round".length)
+      val end = MainSources.closing(s, at + "round".length)
       end >= 0 && s.substring(end + 1).matches("(?s)\\s*\\.cast\\(\\s*\"long\"\\s*\\).*")
     }
     val sqlForm = "(?i)(?<![.\\w])cast\\(\\s*round\\(".r.findAllMatchIn(s).map(_.start).filter { at =>
       val open = s.indexOf('(', s.toLowerCase.indexOf("round", at))
-      val end = closing(s, open)
+      val end = MainSources.closing(s, open)
       end >= 0 && s.substring(end + 1).matches("(?is)\\s+as\\s+(long|bigint)\\s*\\).*")
     }
     (columnForm ++ sqlForm).toSeq.sorted

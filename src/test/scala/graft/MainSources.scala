@@ -25,6 +25,21 @@ object MainSources {
     finally src.close()
   }
 
+  /** Index of the `)` that closes the `(` at `open` in `s`, or -1. */
+  def closing(s: String, open: Int): Int = {
+    var depth = 0
+    var i = open
+    while (i < s.length) {
+      s(i) match {
+        case '(' => depth += 1
+        case ')' => depth -= 1; if (depth == 0) return i
+        case _ =>
+      }
+      i += 1
+    }
+    -1
+  }
+
   /** `path:line` of offset `at` in `f`'s text `s`. */
   def where(f: File, s: String, at: Int): String =
     s"${f.getPath}:${s.substring(0, at).count(_ == '\n') + 1}"

@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -50,6 +51,63 @@ class TrendStreamSpec extends SparkSpec {
       (r.getAs[String]("hashtag"), r.getAs[String]("country")) -> r.getAs[Double]("sentiment_score")).toMap
     assert(scores(("#b", "USA")) == 3.0) // "fast a a b": neutral 2 + 1
     assert(scores(("#a", "NULL")) == 0.0) // "slow slow a": 2 - 2
+  }
+
+  /** `n` FileSource micro-batches of one file each through
+    * [[TrendStream.writer]]; after each batch, the generated source of
+    * its row stage. Returns those sources, the sink and the checkpoint. */
+  private def oneFileBatches(n: Int): (Seq[Seq[String]], TrendSink.MemoryProducerSink, String) = {
+    val in = Files.createTempDirectory("batches_in")
+    val staging = Files.createTempDirectory("batches_staging")
+    val ckpt = Files.createTempDirectory("batches_ckpt").toString
+    val sink = new TrendSink.MemoryProducerSink()
+    val q = TrendStream.writer(
+      TrendStream.trendRows(
+        TweetSource.FileSource(in.toString, maxFilesPerTrigger = Some(1)).load(spark)),
+      sink, Trigger.ProcessingTime("20 milliseconds"), Some(ckpt)).start()
+    try {
+      val sources = (0 until n).map { i =>
+        val f = Files.writeString(staging.resolve(s"$i.txt"),
+          s"Boston, MA /TLOC/ fast #a$i\nParis /TLOC/ slow #b$i")
+        Files.move(f, in.resolve(f.getFileName), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        q.processAllAvailable()
+        val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+        assert(exec.currentBatchId == i)
+        codegenStringSeq(exec.executedPlan).map(_._2)
+      }
+      (sources, sink, ckpt)
+    } finally q.stop()
+  }
+
+  /** `batchTimestampMs` of batch `n`, from the checkpoint's offset log. */
+  private def batchTimestampMs(ckpt: String, n: Int): Long = {
+    val meta = Files.readAllLines(java.nio.file.Path.of(ckpt, "offsets", n.toString)).get(1)
+    "\"batchTimestampMs\":(\\d+)".r.findFirstMatchIn(meta).get.group(1).toLong
+  }
+
+  test("trendRows: the row stage's generated code is the same in every micro-batch") {
+    val batches = 4
+    val (sources, sink, ckpt) = oneFileBatches(batches)
+    // each batch has its own batch time, which Spark would splice into
+    // the source as a literal were it not read through BatchConstant
+    assert((0 until batches).map(batchTimestampMs(ckpt, _)).distinct.size == batches)
+    assert(sink.buffer.size == batches)
+    assert(sources.head.nonEmpty)
+    def lines(s: Seq[String]) = s.flatMap(_.linesIterator)
+    sources.zipWithIndex.tail.foreach { case (s, i) =>
+      val same = s == sources.head
+      assert(same, s"batch $i generated other code than batch 0, first at: " +
+        lines(s).zipAll(lines(sources.head), "", "").find { case (a, b) => a != b })
+    }
+  }
+
+  test("each row's `timestamp` is its batch's `batchTimestampMs / 1000`") {
+    val batches = 4
+    val (_, sink, ckpt) = oneFileBatches(batches)
+    for (n <- 0 until batches) {
+      val stamps = sink.buffer(n.toLong).map(_.getAs[Int]("timestamp").toLong).toSet
+      assert(stamps == Set(batchTimestampMs(ckpt, n) / 1000), s"batch $n")
+    }
   }
 
   test("ParquetSink: batch 0 truncates, later batches append") {
